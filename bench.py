@@ -58,7 +58,8 @@ def build_stdout_line(short: dict[str, float], total: float, sf_val,
     """The ONE driver-parsed JSON line, guaranteed under MAX_LINE chars:
     if the query dict is too large, the FASTEST entries are elided until
     the line fits (``queries_elided`` counts them); error entries (-1.0)
-    are never elided.  Full detail always lands in BENCH_FULL.json."""
+    are never elided.  Full detail always lands in the per-config
+    ``BENCH_FULL_c{cpus}_sf{sf}.json``."""
     def render(q: dict[str, float], elided: int) -> str:
         payload = {
             "metric": "t2_suite_seconds",
@@ -111,7 +112,7 @@ def main() -> int:
         load_pre = -1.0
 
     import __spark_entry__ as entry_mod
-    from datum_spark.session import get_session
+    from datum_spark.session import default_parallelism, get_session
 
     spark = get_session(app_name="datum_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -120,6 +121,7 @@ def main() -> int:
 
     qs = entry_mod.queries()
     timings: dict[str, float] = {}
+    spread: dict[str, list[float]] = {}    # [min, max] of the timed reps
     for name, fn in qs.items():
         # per-entry ISOLATION (r11): drop the operator cache ring and
         # any catalog-cached frames left by the PREVIOUS entry before
@@ -148,6 +150,7 @@ def main() -> int:
             fn(spark, sf_dir).collect()
             samples.append(time.perf_counter() - t0)
         timings[name] = round(statistics.median(samples), 4)
+        spread[name] = [round(min(samples), 4), round(max(samples), 4)]
 
     # composed-pipeline regression gate (one run; separate metric so the
     # per-query suite total stays comparable across rounds)
@@ -173,11 +176,14 @@ def main() -> int:
     # elided until the line fits (queries_elided counts them; error
     # entries are never elided) — the elided tail is exactly the set
     # least able to threaten a 2× gate.  The
-    # full-name 4-decimal detail for EVERY query goes to BENCH_FULL.json
-    # next to this script.  json.dumps compact separators keep every byte.
+    # full-name 4-decimal detail for EVERY query goes to a per-config
+    # BENCH_FULL_c{cpus}_sf{sf}.json next to this script, so runs at
+    # different parallelism or scale never overwrite each other.
+    # json.dumps compact separators keep every byte.
     short = {k.split("_", 1)[0]: round(v, 1) for k, v in timings.items()}
+    cpus = default_parallelism()
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_FULL.json")
+                             f"BENCH_FULL_c{cpus}_sf{sf}.json")
     try:
         load1, load5, load15 = os.getloadavg()
     except OSError:
@@ -191,6 +197,7 @@ def main() -> int:
             "value": total,
             "unit": "sec",
             "queries": timings,
+            "spread": spread,
             "sf": sf_val,
             "n_queries": len(timings),
             "reps": reps,
@@ -200,7 +207,8 @@ def main() -> int:
             # was load, not regression — record load so rounds can tell
             "load_pre_run": load_pre,
             "loadavg": [round(load1, 2), round(load5, 2), round(load15, 2)],
-            "cpus": os.cpu_count(),
+            # the local[] parallelism the run used, not the box's cores
+            "cpus": cpus,
         }, fh, indent=1)
         fh.write("\n")
     os.write(real_stdout_fd, line.encode())

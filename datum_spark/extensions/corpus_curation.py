@@ -879,6 +879,45 @@ FROM adcr a LEFT JOIN exr e ON a.qid = e.qid AND a.vec_id = e.vec_id
 GROUP BY a.qid ORDER BY query_id""")
 
 
+def _exact_ranking(qs: DataFrame, emb: DataFrame) -> DataFrame:
+    """The ground truth the ANN recall entries grade against: each
+    ``qs`` query's exact top-10 over the non-null ``emb`` vectors by
+    squared L2 rounded to 6 dp, ties by ``vec_id`` — ``(qid, vec_id)``
+    rows."""
+    qv = qs.select(F.col("vec_id").alias("qid"),
+                   F.col("embedding").cast("array<double>").alias("qe"))
+    corpus = (emb.filter(F.col("embedding").isNotNull())
+              .select("vec_id",
+                      F.col("embedding").cast("array<double>")
+                       .alias("e")))
+    d2 = F.round(F.aggregate(
+        F.zip_with("qe", "e", lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0), lambda acc, x: acc + x), 6)
+    w = Window.partitionBy("qid").orderBy(d2.asc(), F.col("vec_id").asc())
+    # query-side broadcast (the k-row side), corpus streams — the
+    # same orientation as similarity.py::exact_topk (ADVICE/VERDICT
+    # r12: the corpus side must never be the broadcast build side)
+    return (F.broadcast(qv).crossJoin(corpus)
+              .withColumn("rn", F.row_number().over(w))
+              .filter(F.col("rn") <= 10)
+              .select(F.col("qid"), F.col("vec_id")))
+
+
+def _grade_recall(approx: DataFrame, exact: DataFrame,
+                  hits: str = "hits", recall: str = "recall") -> DataFrame:
+    """Grade an approximate ``(query_id, vec_id, ...)`` top-10 against
+    :func:`_exact_ranking`: per query, the ``hits`` (a long) and
+    ``recall`` (hits / 10, 2 dp) columns."""
+    graded = (approx.join(exact,
+                          (approx["query_id"] == exact["qid"])
+                          & (approx["vec_id"] == exact["vec_id"]), "left")
+              .groupBy("query_id")
+              .agg(F.sum(F.when(F.col("qid").isNotNull(), 1)
+                          .otherwise(0)).alias(hits)))
+    return graded.select("query_id", hits,
+                         F.round(F.col(hits) / 10.0, 2).alias(recall))
+
+
 @x("x186_pq_recall", _pq_oracle_sql())
 def x186(spark, sf):
     """Product-quantization ANN, end to end and value-checked: train
@@ -903,33 +942,7 @@ def x186(spark, sf):
     qs = emb.filter(F.col("vec_id") < 20)
     adc = pq_adc_topk(qs, codes, books, k=10)
 
-    qv = qs.select(F.col("vec_id").alias("qid"),
-                   F.col("embedding").cast("array<double>").alias("qe"))
-    corpus = (emb.filter(F.col("embedding").isNotNull())
-              .select("vec_id",
-                      F.col("embedding").cast("array<double>")
-                       .alias("e")))
-    d2 = F.round(F.aggregate(
-        F.zip_with("qe", "e", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x), 6)
-    w = Window.partitionBy("qid").orderBy(d2.asc(), F.col("vec_id").asc())
-    # query-side broadcast (the k-row side), corpus streams — the
-    # same orientation as similarity.py::exact_topk (ADVICE/VERDICT
-    # r12: the corpus side must never be the broadcast build side)
-    exact = (F.broadcast(qv).crossJoin(corpus)
-               .withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= 10)
-               .select(F.col("qid"), F.col("vec_id")))
-    hits = (adc.join(exact,
-                     (adc["query_id"] == exact["qid"])
-                     & (adc[codes.columns[0]] == exact["vec_id"]),
-                     "left")
-            .groupBy("query_id")
-            .agg(F.sum(F.when(F.col("qid").isNotNull(), 1)
-                        .otherwise(0)).alias("hits")))
-    return (hits.select("query_id", "hits",
-                        F.round(F.col("hits") / 10.0, 2).alias("recall"))
-                .orderBy("query_id"))
+    return _grade_recall(adc, _exact_ranking(qs, emb)).orderBy("query_id")
 
 
 def _qclf_oracle_sql(nb: int = 256, steps: int = 12, lr: float = 4.0,
@@ -1229,33 +1242,7 @@ def x189(spark, sf):
                     & F.col("embedding").isNotNull())
     adc = ivfpq_adc_topk(qs, codes, coarse, books, k=10, nprobe=2)
 
-    qv = qs.select(F.col("vec_id").alias("qid"),
-                   F.col("embedding").cast("array<double>").alias("qe"))
-    corpus = (emb.filter(F.col("embedding").isNotNull())
-              .select("vec_id",
-                      F.col("embedding").cast("array<double>")
-                       .alias("e")))
-    d2 = F.round(F.aggregate(
-        F.zip_with("qe", "e", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x), 6)
-    w = Window.partitionBy("qid").orderBy(d2.asc(), F.col("vec_id").asc())
-    # query-side broadcast (the k-row side), corpus streams — the
-    # same orientation as similarity.py::exact_topk (ADVICE/VERDICT
-    # r12: the corpus side must never be the broadcast build side)
-    exact = (F.broadcast(qv).crossJoin(corpus)
-               .withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= 10)
-               .select(F.col("qid"), F.col("vec_id")))
-    hits = (adc.join(exact,
-                     (adc["query_id"] == exact["qid"])
-                     & (adc[codes.columns[0]] == exact["vec_id"]),
-                     "left")
-            .groupBy("query_id")
-            .agg(F.sum(F.when(F.col("qid").isNotNull(), 1)
-                        .otherwise(0)).alias("hits")))
-    return (hits.select("query_id", "hits",
-                        F.round(F.col("hits") / 10.0, 2).alias("recall"))
-                .orderBy("query_id"))
+    return _grade_recall(adc, _exact_ranking(qs, emb)).orderBy("query_id")
 
 
 def _ivfpq_refine_oracle_sql(shortlist: int = 50, k: int = 10) -> str:
@@ -1320,20 +1307,7 @@ def x190(spark, sf):
     ref = ivfpq_refine_topk(qs, codes, corpus, coarse, books, k=10,
                             shortlist=50, nprobe=2)
 
-    qv = qs.select(F.col("vec_id").alias("qid"),
-                   F.col("embedding").cast("array<double>").alias("qe"))
-    cv = corpus.select("vec_id",
-                       F.col("embedding").cast("array<double>")
-                        .alias("e"))
-    d2 = F.round(F.aggregate(
-        F.zip_with("qe", "e", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x), 6)
-    w = Window.partitionBy("qid").orderBy(d2.asc(), F.col("vec_id").asc())
-    # query-side broadcast; the corpus-derived cv side streams
-    exact = (F.broadcast(qv).crossJoin(cv)
-               .withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= 10)
-               .select("qid", F.col("vec_id").alias("__ev")))
+    exact = _exact_ranking(qs, corpus).withColumnRenamed("vec_id", "__ev")
     # per-query hit counts for both stages via two left joins
     adc_t = adc.select(F.col("query_id").alias("qid"),
                        F.col("vec_id").alias("__av"))
@@ -2711,44 +2685,11 @@ def x212(spark, sf):
     adc_p = pq_adc_topk(qs, codes_p, books_p, k=10)
     adc_o = opq_adc_topk(qs, codes_o, books_o, u, perm, k=10)
 
-    qv = qs.select(F.col("vec_id").alias("qid"),
-                   F.col("embedding").cast("array<double>").alias("qe"))
-    corpus = (emb.filter(F.col("embedding").isNotNull())
-              .select("vec_id",
-                      F.col("embedding").cast("array<double>")
-                       .alias("e")))
-    d2 = F.round(F.aggregate(
-        F.zip_with("qe", "e", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x), 6)
-    w = Window.partitionBy("qid").orderBy(d2.asc(),
-                                          F.col("vec_id").asc())
-    # query-side broadcast (the k-row side), corpus streams — the
-    # same orientation as similarity.py::exact_topk (ADVICE/VERDICT
-    # r12: the corpus side must never be the broadcast build side)
-    exact = (F.broadcast(qv).crossJoin(corpus)
-               .withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= 10)
-               .select(F.col("qid"), F.col("vec_id")))
-
-    def hits(adc, out):
-        return (adc.join(exact,
-                         (adc["query_id"] == exact["qid"])
-                         & (adc["vec_id"] == exact["vec_id"]), "left")
-                .groupBy("query_id")
-                .agg(F.sum(F.when(F.col("qid").isNotNull(), 1)
-                            .otherwise(0)).alias(out)))
-
-    hp = hits(adc_p, "hits_pq")
-    ho = hits(adc_o, "hits_opq")
-    return (hp.join(ho, "query_id")
-              .select("query_id",
-                      F.col("hits_pq").cast("long").alias("hits_pq"),
-                      F.round(F.col("hits_pq") / 10.0, 2)
-                       .alias("recall_pq"),
-                      F.col("hits_opq").cast("long").alias("hits_opq"),
-                      F.round(F.col("hits_opq") / 10.0, 2)
-                       .alias("recall_opq"))
-              .orderBy("query_id"))
+    exact = _exact_ranking(qs, emb)
+    return (_grade_recall(adc_p, exact, hits="hits_pq", recall="recall_pq")
+            .join(_grade_recall(adc_o, exact, hits="hits_opq",
+                                recall="recall_opq"), "query_id")
+            .orderBy("query_id"))
 
 
 def _x213_sql() -> str:

@@ -1030,11 +1030,6 @@ def _node_rings(rings):
     return out_rings
 
 
-def _ring_self_node(ring):
-    """Single-ring noding (see :func:`_node_rings`)."""
-    return _node_rings([ring])[0]
-
-
 def _extract_simple_loops(noded):
     """Cut a noded closed vertex sequence into SIMPLE loops at repeated
     vertices (each loop visits no vertex twice).  Degenerate loops

@@ -171,6 +171,16 @@ def _decimal_round_vec(x, mask, out, nd: int):
     return out
 
 
+def _bias_grad_terms(resid, n, nb: float):
+    """Per-doc bias-gradient terms of the driver GD, replayed exactly as
+    the SQL spells the bias pseudo-bucket: ``c = n/B`` computed first,
+    then ``((p−y)·c)·B/n`` left to right.  Regrouping as
+    ``(p−y)·((n/B)·B/n)`` differs by an ulp on ~12% of doubles, and the
+    driver must fork at a HALF_UP boundary only where the distributed
+    loop forks (ADVICE r14)."""
+    return (resid * (n / nb)) * nb / n
+
+
 def _fit_rows_driver(rows, y_mat, n_buckets: int, steps: int,
                      lr: float, quantize: int):
     """The GD loop of :func:`_fit_features` / :func:`_fit_features_multi`
@@ -233,12 +243,8 @@ def _fit_rows_driver(rows, y_mat, n_buckets: int, steps: int,
             g = _sql_round_vec(np.bincount(
                 flat_b, weights=contrib.ravel(),
                 minlength=n_buckets) / nd, quantize)
-            # bias pseudo-bucket replayed exactly as the SQL spells it:
-            # c = n/B computed first, then ((p−y)·c)·B/n per term —
-            # (n/B)·B/n is 1.0 for most doubles but not all, and the
-            # driver must fork only where the distributed loop forks
             gb = _sql_round_vec(
-                np.array([(resid * ((n / nb) * nb / n)).sum() / nd]),
+                np.array([_bias_grad_terms(resid, n, nb).sum() / nd]),
                 quantize)[0]
             # same update the distributed loop applies to collected
             # gradient rows (Python round on Python floats — np.float64

@@ -314,12 +314,12 @@ def _driver_vectors(v, expansion: int = 6):
     rows = v.select("__e").collect()
     if not rows:
         return None
-    # ragged vector lengths (a corrupt fixture / mixed-width corpus)
+    # null or ragged vectors (a corrupt fixture / mixed-width corpus)
     # must fall back to the distributed loop — np.array would raise an
     # inhomogeneous-shape ValueError (or build an object array) where
-    # the zip_with path degrades via null propagation (ADVICE r13)
-    width = len(rows[0]["__e"])
-    if any(len(r["__e"]) != width for r in rows):
+    # the zip_with path degrades via null propagation (ADVICE r13/r14)
+    widths = {None if r["__e"] is None else len(r["__e"]) for r in rows}
+    if len(widths) != 1 or None in widths:
         return None
     return np.array([r["__e"] for r in rows], dtype=np.float64)
 

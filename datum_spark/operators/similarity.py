@@ -28,17 +28,6 @@ def _dot_expr(a, b):
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _cosine_expr(a, b):
-    """Cosine similarity between two array<double> columns, JVM-side.
-
-    NOTE: 3 higher-order aggregates per pair — fine for scoring joined
-    candidates, but for all-pairs/top-k loops prefer :func:`_normalize_col`
-    once per vector + a single `_dot_expr` per pair (3× less work in the
-    quadratic stage).
-    """
-    return _dot_expr(a, b) / (F.sqrt(_dot_expr(a, a)) * F.sqrt(_dot_expr(b, b)))
-
-
 def _normalize_col(v):
     """Unit-normalize an array<double> column (map-side, once per vector).
 

@@ -952,11 +952,6 @@ def normalize_text(col: Column) -> Column:
     return F.trim(out)
 
 
-def with_normalized_text(df: DataFrame, text_col: str = "text",
-                         out_col: str = "norm_text") -> DataFrame:
-    return df.withColumn(out_col, normalize_text(F.col(text_col)))
-
-
 def normalize_text_oracle_sql(expr: str) -> str:
     """The DuckDB spelling of :func:`normalize_text` over SQL
     expression ``expr`` — generated from the SAME ordered tables."""

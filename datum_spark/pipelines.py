@@ -24,9 +24,14 @@ Stage order (each stage is the scale-safe variant measured in SCALE.md):
     `write_training_shards` (token-balanced contiguous hive shards via
     the distributed prefix sum), metrics observed on the write job.
 
-Every stage is a pure DataFrame transformation until the final write;
-counts come from ONE `Observation`-instrumented pass per boundary (no
-extra count jobs beyond the per-stage audits the report asks for).
+Stages 0a–3 are written once, as the ordered stage list
+:func:`_corpus_stages` builds; the batch pipeline and the streaming
+ingest gate (`streaming.stateful.ingest_sink`) both run that list.
+Every stage is a pure DataFrame transformation; a runner materialises
+each stage boundary once (persisted, or committed as a snapshot) and
+counts it with one ``.count()`` job (span dedup: one aggregate job) —
+those counts are the report's funnel rows.  Mixing and the shard write
+then run on the last boundary.
 
 The pipeline is deliberately parameter-light — it is the *composition*
 that is the product; each stage's full surface stays available on the
@@ -37,9 +42,205 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _boundary(_df_in: DataFrame, out: DataFrame) -> DataFrame:
+    return out
+
+
+class _Stage(NamedTuple):
+    """One named step of the corpus pipeline.
+
+    ``apply`` maps the stage's input to its BOUNDARY frame — what a
+    runner persists or commits; ``audit`` reads the stage's funnel rows
+    off that boundary; ``then`` maps ``(input, boundary)`` to the next
+    stage's input (a projection, never materialised on its own).
+    ``persist=False`` marks a map-only stage the in-memory runner counts
+    without caching: recomputing it inside the next boundary's job is
+    cheaper than the extra job that materialises a cache."""
+
+    name: str
+    apply: Callable[[DataFrame], DataFrame]
+    audit: Callable[[DataFrame], dict]
+    then: Callable[[DataFrame, DataFrame], DataFrame] = _boundary
+    persist: bool = True
+
+
+def _rows(key: str) -> Callable[[DataFrame], dict]:
+    """The plain audit: the boundary's row count under ``key``."""
+    return lambda df: {key: df.count()}
+
+
+def _corpus_stages(id_col: str, text_col: str, *, min_quality,
+                   quality_model, screen_quality: bool,
+                   lang_models: dict | None, allowed_langs,
+                   lang_col: str | None, unigram_vocab: list | None,
+                   max_nats_per_token: float | None,
+                   c4_line_filter: bool, dedup: _Stage,
+                   span_dedup_n: int | None, eval_df: DataFrame | None,
+                   contamination_ngram: int) -> list[_Stage]:
+    """The corpus pipeline's stage list, in order: ``line_filter``,
+    ``langid``, ``quality``, ``repetition``, ``perplexity``, ``deduped``
+    (the caller's — the batch self-dedup or the streaming screen against
+    a static corpus), ``span_dedup``, ``decontaminated``.  A disabled
+    stage is absent; ``screen_quality=False`` drops the quality stage.
+    The last stage is always ``decontaminated``, whose boundary is the
+    list's output."""
+    from .operators.dedup import benchmark_contamination
+
+    # Gopher's stop-word rule is language-keyed: use the caller's
+    # lang_col if given, else attach the langid stage's own prediction
+    # when both gates run (ADVICE r12 — never silently apply the
+    # English stop list to a multilingual corpus)
+    wants_lang = quality_model in ("gopher", "gopher+rep")
+    attach = ("__langid_pred" if wants_lang and lang_col is None
+              and lang_models is not None and allowed_langs else None)
+    eff_lang = lang_col if lang_col is not None else attach
+
+    stages = []
+    if c4_line_filter:
+        stages.append(_Stage("line_filter",
+                             lambda d: _c4_line_stage(d, text_col),
+                             _rows("rows_line_filtered"), persist=False))
+    if lang_models is not None and allowed_langs:
+        stages.append(_Stage(
+            "langid",
+            lambda d: _langid_gate(d, id_col, text_col, lang_models,
+                                   allowed_langs, attach=attach),
+            _rows("rows_langid")))
+    if screen_quality:
+        # "gopher+rep" runs as TWO gates so the funnel reports what each
+        # rule family dropped (rows_quality = page-shape, rows_repetition
+        # = within-document repetition)
+        composed = quality_model == "gopher+rep"
+        stages.append(_Stage(
+            "quality",
+            lambda d: _quality_gate(d, id_col, text_col, min_quality,
+                                    "gopher" if composed else quality_model,
+                                    lang_col=eff_lang),
+            _rows("rows_quality")))
+        if composed:
+            stages.append(_Stage(
+                "repetition",
+                lambda d: _quality_gate(d, id_col, text_col, min_quality,
+                                        "gopher_rep"),
+                _rows("rows_repetition")))
+        if attach is not None:
+            # the attached prediction never leaves the quality family
+            stages[-1] = stages[-1]._replace(
+                then=lambda _d, q: q.drop(attach))
+    if unigram_vocab is not None and max_nats_per_token is not None:
+        stages.append(_Stage(
+            "perplexity",
+            lambda d: _perplexity_gate(d, id_col, text_col, unigram_vocab,
+                                       max_nats_per_token),
+            _rows("rows_perplexity")))
+    stages.append(dedup)
+    if span_dedup_n is not None:
+        stages.append(_span_dedup_stage(id_col, text_col, span_dedup_n))
+
+    def decontaminate(d: DataFrame) -> DataFrame:
+        if eval_df is None:
+            return d
+        contaminated = benchmark_contamination(
+            d, eval_df, id_col, text_col,
+            n=contamination_ngram).select(id_col)
+        return d.join(contaminated, id_col, "anti")
+
+    stages.append(_Stage("decontaminated", decontaminate,
+                         _rows("rows_decontaminated")))
+    return stages
+
+
+def _near_dup_stage(id_col: str, text_col: str,
+                    threshold: float) -> _Stage:
+    """Batch dedup: keep each ``near_dup_clusters`` cluster's minimum-id
+    member (the cluster id).  The LSH flood stats join the audit only
+    when the stage computed in this run — a resumed stage's stats live
+    in the run that produced it."""
+    from .operators.dedup import near_dup_clusters
+
+    floods = []
+
+    def apply(q: DataFrame) -> DataFrame:
+        clusters, flood = near_dup_clusters(q, id_col, text_col,
+                                            threshold=threshold,
+                                            with_stats=True)
+        if flood is not None:
+            floods.append(flood)
+        return q.join(clusters.filter(F.col(id_col) == F.col("cluster_id"))
+                              .select(id_col), id_col, "semi")
+
+    def audit(deduped: DataFrame) -> dict:
+        report = {"rows_deduped": deduped.count()}
+        # bucket-cap loss is observable, not silent: nonzero
+        # lsh_buckets_skipped means the dedup recall was truncated by
+        # flooded band buckets (the count or the checkpoint commit was
+        # the observed action, so .get does not block)
+        for flood in floods:
+            report.update({f"lsh_{k}": int(v) for k, v in flood.get.items()})
+        return report
+
+    return _Stage("deduped", apply, audit)
+
+
+def _span_dedup_stage(id_col: str, text_col: str, n: int) -> _Stage:
+    """Span-level dedup — the ExactSubstr ACTION of Lee et al. 2022:
+    rewrite surviving docs dropping cross-document duplicated spans
+    (keep-first), then drop docs left empty.  It runs after doc-level
+    dedup, so whole-page duplicates never reach the span pass (the paper
+    composes them the same way).  The boundary is the rewrite WITH its
+    audit columns, so a resumed run recovers both funnel metrics from
+    the committed table."""
+    from .operators.dedup import remove_duplicated_spans
+
+    kept = F.col("n_words") > F.col("n_words_removed")
+
+    def audit(rw: DataFrame) -> dict:
+        sums = rw.agg(F.sum("n_words_removed").alias("w"),
+                      F.sum(F.when(kept, 1).otherwise(0)).alias("k")).first()
+        return {"span_words_removed": int(sums["w"] or 0),
+                "rows_span_dedup": int(sums["k"] or 0)}
+
+    return _Stage("span_dedup",
+                  lambda d: remove_duplicated_spans(d, id_col, text_col,
+                                                    n=n),
+                  audit,
+                  lambda d, rw: rw.filter(kept).select(*d.columns))
+
+
+def _run_lazy(docs: DataFrame, stages: list[_Stage]) -> DataFrame:
+    """Compose the stages with no action at any boundary."""
+    for st in stages:
+        docs = st.then(docs, st.apply(docs))
+    return docs
+
+
+def _run_in_memory(docs: DataFrame,
+                   stages: list[_Stage]) -> tuple[DataFrame, dict]:
+    """At each boundary: persist, audit, then unpersist the predecessor.
+    Returns ``(output, report)``; the output is the last boundary, still
+    persisted — the caller unpersists it once consumed."""
+    report: dict = {"rows_in": docs.count()}
+    held = None
+    for st in stages:
+        out = st.apply(docs)
+        if st.persist:
+            out = out.persist()
+        report.update(st.audit(out))
+        if st.persist:
+            # a stage may hand back its held input unchanged
+            # (decontamination without an eval set): keep it cached
+            if held is not None and held is not out:
+                held.unpersist()
+            held = out
+        docs = st.then(docs, out)
+    return docs, report
 
 
 class _StageStore:
@@ -85,6 +286,20 @@ class _StageStore:
             return t.read(), False
         return t.read(), True
 
+    def run_stages(self, docs: DataFrame,
+                   stages: list[_Stage]) -> tuple[DataFrame, dict]:
+        """At each boundary: commit the stage or resume it, then audit
+        it.  ``rows_in`` is ``None`` when the first stage resumed."""
+        report: dict = {}
+        for i, st in enumerate(stages):
+            out, resumed = self.run(st.name, partial(st.apply, docs))
+            if i == 0:
+                report["rows_in"] = None if resumed else docs.count()
+            report[f"resumed_{st.name}"] = resumed
+            report.update(st.audit(out))
+            docs = st.then(docs, out)
+        return docs, report
+
 
 def build_training_corpus(docs: DataFrame, eval_df: DataFrame | None,
                           out_path: str, n_shards: int = 8,
@@ -112,17 +327,24 @@ def build_training_corpus(docs: DataFrame, eval_df: DataFrame | None,
     row counts (``rows_in``, ``rows_quality``, ``rows_deduped``,
     ``rows_decontaminated``, ``rows_mixed``, plus ``rows_langid`` /
     ``rows_perplexity`` when those gates are enabled) plus the shard
-    write's observed ``rows``/``tokens``/``token_budget``.  Counts are
-    taken on the cached stage boundaries the dedup pass needs anyway,
-    so the audit costs no extra corpus scans beyond one count per
-    stage.
+    write's observed ``rows``/``tokens``/``token_budget``.
 
-    ``workdir`` (optional) makes the run RESUMABLE: the quality, dedup
-    and decontamination boundaries are committed as snapshot-table
-    checkpoints keyed by ``run_id`` (see :class:`_StageStore`), and a
-    re-run skips every stage already committed — ``report`` then
-    carries ``resumed_<stage>`` flags.  Without it the pipeline is the
-    original single-pass composition (persist/unpersist boundaries).
+    The stage list (:func:`_corpus_stages`) is written once and run by
+    one of three runners, which differ only at a stage boundary:
+
+    - in memory (no ``workdir``): persist the boundary, count it, then
+      unpersist the predecessor — one count job per stage;
+    - resumable (``workdir`` given): commit the boundary as a snapshot
+      table at ``{workdir}/{run_id}/{stage}`` or, when a previous run
+      with the same ``run_id`` committed it, resume from it (see
+      :class:`_StageStore`), then count it.  ``report`` carries
+      ``resumed_<stage>`` flags, ``rows_in`` is ``None`` when the first
+      stage resumed, and the ``lsh_*`` flood stats appear only when the
+      dedup stage computed in this run.  Mixing and the shard write
+      always re-run (a full overwrite of ``out_path``);
+    - streaming (`streaming.stateful.ingest_sink`): per micro-batch, the
+      gate stages with its own dedup screen; counted (in memory) only
+      with ``with_funnel=True``.
 
     ``quality_model`` (optional ``(weights, bias)`` from
     :func:`operators.classifier.quality_classifier_fit`) replaces the
@@ -164,136 +386,25 @@ def build_training_corpus(docs: DataFrame, eval_df: DataFrame | None,
     (docs with any words left) and ``span_words_removed`` (total
     words cut).
     """
-    if workdir is not None:
-        return _build_training_corpus_resumable(
-            docs, eval_df, out_path, n_shards, id_col, text_col,
-            source_col, min_quality, dedup_threshold, contamination_ngram,
-            source_weights, default_weight, workdir, run_id,
-            quality_model, lang_models, allowed_langs,
-            unigram_vocab, max_nats_per_token, lang_col, span_dedup_n,
-            c4_line_filter)
-    from .operators.dedup import benchmark_contamination, near_dup_clusters
     from .operators.packing import write_training_shards
     from .operators.sampling import mix_sources_md5
     from .operators.text import token_count
 
-    report: dict = {"rows_in": docs.count()}
-
-    # Gopher's stop-word rule is language-keyed: use the caller's
-    # lang_col if given, else attach the langid stage's own prediction
-    # when both gates run (ADVICE r12 — never silently apply the
-    # English stop list to a multilingual corpus)
-    wants_lang = quality_model in ("gopher", "gopher+rep")
-    attach = ("__langid_pred" if wants_lang and lang_col is None
-              and lang_models is not None and allowed_langs else None)
-    eff_lang = lang_col if lang_col is not None else attach
-
-    # 0a. C4 line filter (optional, r13) — C4 §2.2 applies its LINE
-    # rules BEFORE any page-level judgement, so the rewrite runs ahead
-    # of every gate; docs left with no lines drop here (map-only; the
-    # count is the stage's funnel row)
-    if c4_line_filter:
-        docs = _c4_line_stage(docs, text_col)
-        report["rows_line_filtered"] = docs.count()
-
-    # 0. language gate (optional) — the multilingual first pass
-    gated = None
-    if lang_models is not None and allowed_langs:
-        docs = gated = _langid_gate(docs, id_col, text_col, lang_models,
-                                    allowed_langs,
-                                    attach=attach).persist()
-        report["rows_langid"] = docs.count()
-
-    # 1. quality gate (map-only; learned when a model is supplied).
-    # "gopher+rep" runs as TWO gates so the funnel reports what each
-    # rule family dropped (rows_quality = page-shape, rows_repetition
-    # = within-document repetition)
-    if quality_model == "gopher+rep":
-        q1 = _quality_gate(docs, id_col, text_col, min_quality,
-                           "gopher", lang_col=eff_lang).persist()
-        report["rows_quality"] = q1.count()
-        if gated is not None:
-            gated.unpersist()
-        q = _quality_gate(q1, id_col, text_col, min_quality,
-                          "gopher_rep")
-        if attach is not None:
-            q = q.drop(attach)
-        q = q.persist()
-        report["rows_repetition"] = q.count()
-        q1.unpersist()
+    stages = _corpus_stages(
+        id_col, text_col, min_quality=min_quality,
+        quality_model=quality_model, screen_quality=True,
+        lang_models=lang_models, allowed_langs=allowed_langs,
+        lang_col=lang_col, unigram_vocab=unigram_vocab,
+        max_nats_per_token=max_nats_per_token,
+        c4_line_filter=c4_line_filter,
+        dedup=_near_dup_stage(id_col, text_col, dedup_threshold),
+        span_dedup_n=span_dedup_n, eval_df=eval_df,
+        contamination_ngram=contamination_ngram)
+    if workdir is None:
+        clean, report = _run_in_memory(docs, stages)
     else:
-        q = _quality_gate(docs, id_col, text_col, min_quality,
-                          quality_model, lang_col=eff_lang)
-        if attach is not None:
-            q = q.drop(attach)
-        q = q.persist()
-        report["rows_quality"] = q.count()
-        if gated is not None:
-            # release the langid boundary once the quality count has
-            # consumed it — every other stage unpersists its
-            # predecessor; without this the corpus-sized gated frame
-            # is held for the rest of the session (ADVICE r12)
-            gated.unpersist()
-
-    # 1b. perplexity gate (optional) — the learned LM quality signal,
-    # its own funnel row so the report shows what EACH gate dropped
-    if unigram_vocab is not None and max_nats_per_token is not None:
-        prev = q
-        q = _perplexity_gate(q, id_col, text_col, unigram_vocab,
-                             max_nats_per_token).persist()
-        report["rows_perplexity"] = q.count()
-        prev.unpersist()
-
-    # 2. dedup: keep each cluster's minimum-id member (the cluster id)
-    clusters, flood = near_dup_clusters(q, id_col, text_col,
-                                        threshold=dedup_threshold,
-                                        with_stats=True)
-    deduped = (q.join(clusters.filter(F.col(id_col) == F.col("cluster_id"))
-                              .select(id_col),
-                      id_col, "semi"))
-    deduped = deduped.persist()
-    report["rows_deduped"] = deduped.count()
-    if flood is not None:
-        # bucket-cap loss is observable, not silent: nonzero
-        # lsh_buckets_skipped means the dedup recall was truncated by
-        # flooded band buckets (metrics fold into the count above)
-        report.update({f"lsh_{k}": int(v) for k, v in flood.get.items()})
-    q.unpersist()
-
-    # 2b. span-level dedup (optional, r13) — the ExactSubstr ACTION of
-    # Lee et al. 2022: rewrite surviving docs dropping cross-document
-    # duplicated spans (keep-first), then drop docs left empty.  Doc-
-    # level dedup runs FIRST so whole-page duplicates never reach the
-    # span pass (the paper composes them the same way).
-    dedup_cache = deduped            # the persisted frame to release
-    if span_dedup_n is not None:
-        from .operators.dedup import remove_duplicated_spans
-
-        prev = deduped
-        rw = remove_duplicated_spans(deduped, id_col, text_col,
-                                     n=span_dedup_n).persist()
-        sums = rw.agg(
-            F.sum("n_words_removed").alias("w"),
-            F.sum(F.when(F.col("n_words") > F.col("n_words_removed"),
-                         1).otherwise(0)).alias("k")).first()
-        report["span_words_removed"] = int(sums["w"] or 0)
-        report["rows_span_dedup"] = int(sums["k"] or 0)
-        deduped = (rw.filter(F.col("n_words") > F.col("n_words_removed"))
-                     .select(*prev.columns))
-        prev.unpersist()
-        dedup_cache = rw
-
-    # 3. decontamination: anti-join on the contaminated id set
-    if eval_df is not None:
-        contaminated = benchmark_contamination(
-            deduped, eval_df, id_col, text_col,
-            n=contamination_ngram).select(id_col)
-        clean = deduped.join(contaminated, id_col, "anti")
-    else:
-        clean = deduped
-    clean = clean.persist()
-    report["rows_decontaminated"] = clean.count()
-    dedup_cache.unpersist()
+        store = _StageStore(docs.sparkSession, workdir, run_id)
+        clean, report = store.run_stages(docs, stages)
 
     # 4. deterministic source mixing (md5 keep sets — reproducible)
     mixed = mix_sources_md5(clean, source_weights or {},
@@ -308,7 +419,8 @@ def build_training_corpus(docs: DataFrame, eval_df: DataFrame | None,
         with_tokens, out_path, order_col=id_col, token_col="__n_tokens",
         n_shards=n_shards)
     report.update(write_metrics)
-    clean.unpersist()
+    if workdir is None:
+        clean.unpersist()
     return sharded, report
 
 
@@ -430,166 +542,6 @@ def _perplexity_gate(docs: DataFrame, id_col: str, text_col: str,
                     <= float(max_nats_per_token))
             .select(id_col))
     return docs.join(keep, id_col, "semi")
-
-
-def _build_training_corpus_resumable(docs, eval_df, out_path, n_shards,
-                                     id_col, text_col, source_col,
-                                     min_quality, dedup_threshold,
-                                     contamination_ngram, source_weights,
-                                     default_weight, workdir,
-                                     run_id,
-                                     quality_model=None,
-                                     lang_models=None,
-                                     allowed_langs=None,
-                                     unigram_vocab=None,
-                                     max_nats_per_token=None,
-                                     lang_col=None,
-                                     span_dedup_n=None,
-                                     c4_line_filter=False
-                                     ) -> tuple[DataFrame, dict]:
-    """Checkpointed variant of :func:`build_training_corpus` — same
-    stages and report keys, but the quality/dedup/decontamination
-    boundaries commit to snapshot tables and resume across runs (see
-    :class:`_StageStore`).  Flood stats appear only when the dedup
-    stage actually computed this run (a resumed stage's stats live in
-    the run that produced it)."""
-    from .operators.dedup import benchmark_contamination, near_dup_clusters
-    from .operators.packing import write_training_shards
-    from .operators.sampling import mix_sources_md5
-    from .operators.text import token_count
-
-    store = _StageStore(docs.sparkSession, workdir, run_id)
-    report: dict = {}
-    flood_box: list = []
-    orig_docs = docs
-
-    # same language-column resolution as the single-pass path: the
-    # caller's lang_col, else the langid stage's attached prediction
-    wants_lang = quality_model in ("gopher", "gopher+rep")
-    attach = ("__langid_pred" if wants_lang and lang_col is None
-              and lang_models is not None and allowed_langs else None)
-    eff_lang = lang_col if lang_col is not None else attach
-
-    first_resumed = None
-    if c4_line_filter:
-        docs_lf = docs
-        docs, resumed = store.run(
-            "line_filter",
-            lambda: _c4_line_stage(docs_lf, text_col))
-        first_resumed = resumed
-        report["resumed_line_filter"] = resumed
-        report["rows_line_filtered"] = docs.count()
-
-    if lang_models is not None and allowed_langs:
-        docs_in = docs
-        docs, resumed = store.run(
-            "langid",
-            lambda: _langid_gate(docs_in, id_col, text_col,
-                                 lang_models, allowed_langs,
-                                 attach=attach))
-        if first_resumed is None:
-            first_resumed = resumed
-        report["resumed_langid"] = resumed
-        report["rows_langid"] = docs.count()
-
-    src = docs
-    q, resumed = store.run(
-        "quality",
-        lambda: _quality_gate(
-            src, id_col, text_col, min_quality,
-            "gopher" if quality_model == "gopher+rep" else quality_model,
-            lang_col=eff_lang))
-    if first_resumed is None:
-        first_resumed = resumed
-    report["rows_in"] = orig_docs.count() if not first_resumed else None
-    report["resumed_quality"] = resumed
-    report["rows_quality"] = q.count()
-
-    if quality_model == "gopher+rep":
-        # the repetition family is its own checkpointed stage and its
-        # own funnel row, mirroring the single-pass decomposition
-        q_in = q
-        q, resumed = store.run(
-            "repetition",
-            lambda: _quality_gate(q_in, id_col, text_col, min_quality,
-                                  "gopher_rep"))
-        report["resumed_repetition"] = resumed
-        report["rows_repetition"] = q.count()
-    if attach is not None:
-        q = q.drop(attach)
-
-    if unigram_vocab is not None and max_nats_per_token is not None:
-        q_in = q
-        q, resumed = store.run(
-            "perplexity",
-            lambda: _perplexity_gate(q_in, id_col, text_col,
-                                     unigram_vocab,
-                                     max_nats_per_token))
-        report["resumed_perplexity"] = resumed
-        report["rows_perplexity"] = q.count()
-
-    def _dedup():
-        clusters, flood = near_dup_clusters(q, id_col, text_col,
-                                            threshold=dedup_threshold,
-                                            with_stats=True)
-        if flood is not None:
-            flood_box.append(flood)
-        return q.join(clusters.filter(F.col(id_col) == F.col("cluster_id"))
-                              .select(id_col), id_col, "semi")
-
-    deduped, resumed = store.run("deduped", _dedup)
-    report["resumed_deduped"] = resumed
-    report["rows_deduped"] = deduped.count()
-    if flood_box:
-        # the checkpoint commit was the action, so .get is safe here
-        report.update({f"lsh_{k}": int(v) for k, v in flood_box[0].get.items()})
-
-    if span_dedup_n is not None:
-        from .operators.dedup import remove_duplicated_spans
-
-        d_in = deduped
-        # the checkpoint commits the REWRITE with its audit columns,
-        # so a resumed run recovers both funnel metrics from the table
-        rw, resumed = store.run(
-            "span_dedup",
-            lambda: remove_duplicated_spans(d_in, id_col, text_col,
-                                            n=span_dedup_n))
-        report["resumed_span_dedup"] = resumed
-        sums = rw.agg(
-            F.sum("n_words_removed").alias("w"),
-            F.sum(F.when(F.col("n_words") > F.col("n_words_removed"),
-                         1).otherwise(0)).alias("k")).first()
-        report["span_words_removed"] = int(sums["w"] or 0)
-        report["rows_span_dedup"] = int(sums["k"] or 0)
-        deduped = (rw.filter(F.col("n_words") > F.col("n_words_removed"))
-                     .select(*d_in.columns))
-
-    def _decontaminate():
-        if eval_df is None:
-            return deduped
-        contaminated = benchmark_contamination(
-            deduped, eval_df, id_col, text_col,
-            n=contamination_ngram).select(id_col)
-        return deduped.join(contaminated, id_col, "anti")
-
-    clean, resumed = store.run("decontaminated", _decontaminate)
-    report["resumed_decontaminated"] = resumed
-    report["rows_decontaminated"] = clean.count()
-
-    # mixing + sharding are cheap map-side tails of the last checkpoint;
-    # the shard WRITE is the run's deliverable, always re-executed (it
-    # is itself a full-overwrite of out_path, so retries are idempotent)
-    mixed = mix_sources_md5(clean, source_weights or {},
-                            source_col=source_col, id_col=id_col,
-                            default_weight=default_weight)
-    report["rows_mixed"] = mixed.count()
-    with_tokens = mixed.withColumn(
-        "__n_tokens", token_count(F.col(text_col)).cast("long"))
-    sharded, write_metrics = write_training_shards(
-        with_tokens, out_path, order_col=id_col, token_col="__n_tokens",
-        n_shards=n_shards)
-    report.update(write_metrics)
-    return sharded, report
 
 
 def corpus_drift_report(old_docs: DataFrame, new_docs: DataFrame,

@@ -410,6 +410,12 @@ def contamination_sink(stream_docs: DataFrame, eval_df: DataFrame,
             .start())
 
 
+# the per-micro-batch funnel row ingest_sink writes (disabled gates NULL)
+_INGEST_FUNNEL = ("rows_in", "rows_line_filtered", "rows_langid",
+                  "rows_quality", "rows_repetition", "rows_perplexity",
+                  "rows_deduped", "rows_decontaminated")
+
+
 def ingest_sink(stream_docs: DataFrame, corpus: DataFrame,
                 eval_df: DataFrame | None, out_path: str,
                 checkpoint_dir: str,
@@ -425,51 +431,33 @@ def ingest_sink(stream_docs: DataFrame, corpus: DataFrame,
                 lang_col: str | None = None,
                 c4_line_filter: bool = False):
     """Streaming daily-ingest gate — the production front door of the
-    corpus pipeline: every micro-batch of INCOMING documents is
-    (pre) C4 line-filtered (optional, r13 — ``c4_line_filter=True``
-    rewrites each doc through the batch ``_c4_line_stage`` and drops
-    emptied docs, the paper's line-rules-first order),
-    (0) language-gated (optional, r12 — ``lang_models`` +
-    ``allowed_langs``, the same stage-0 screen as the batch
-    pipeline), (0b) quality-gated (optional, r12/r13 —
-    ``quality_model``: a learned ``(w, b)`` or a published-rule-set
-    sentinel the batch ``_quality_gate`` accepts (``"gopher"``,
-    ``"c4"``, ``"gopher_rep"``, ``"gopher+rep"`` — the composed
-    sentinel runs as two screens with its own ``rows_repetition``
-    funnel row, exactly like the batch pipeline; ``lang_col`` names
-    a language column for Gopher's stop-word rule, and when absent
-    the langid stage's own prediction is reused); ``None`` — the
-    default — applies NO quality screen so pre-r12 sink behavior is
-    unchanged),
-    (1) perplexity-gated (optional, r12 —
-    ``unigram_vocab`` + ``max_nats_per_token``, the CCNet filter
-    direction), (2) near-dup-screened against the STATIC corpus
+    corpus pipeline: every micro-batch of INCOMING documents runs the
+    batch pipeline's stage list (``pipelines._corpus_stages``; the gate
+    options mean what they mean for
+    :func:`~datum_spark.pipelines.build_training_corpus`) with two
+    differences: ``quality_model=None`` — the default — applies NO
+    quality screen (``"heuristic"`` selects the score gate), and the
+    dedup stage screens the delta against the STATIC corpus
     (`incremental_near_dups_md5`: delta×corpus candidates only, the
-    corpus never self-joins, delta band buckets broadcast) and
-    (3) decontaminated against the eval set; survivors land in
-    ``out_path`` (parquet, one overwritten ``batch=<id>/`` dir per
-    micro-batch — see :func:`_idempotent_batch_write`; replays are
+    corpus never self-joins, delta band buckets broadcast).  Survivors
+    land in ``out_path`` (parquet, one overwritten ``batch=<id>/`` dir
+    per micro-batch — see :func:`_idempotent_batch_write`; replays are
     no-ops).
 
-    The optional gates REUSE the batch pipeline's gate functions
-    (``pipelines._langid_gate`` / ``_perplexity_gate``) so streaming
-    and batch cannot drift: both are per-doc semi joins on a scored
-    id set against STATIC side inputs (trained models / a trained
-    vocabulary), so the union of per-batch survivors is exactly the
-    batch-mode result regardless of batching — the same structural
-    stream==batch parity as :func:`contamination_sink`, and the
-    parity test pins it across all four screens.
+    Every stage is a per-doc decision against STATIC side inputs
+    (trained models, a vocabulary, the corpus, the eval set), so the
+    union of per-batch survivors is exactly the batch-mode result
+    regardless of batching — the same structural stream==batch parity
+    as :func:`contamination_sink`, and the parity tests pin it.
 
-    ``with_funnel=True`` adds the batch pipeline's funnel accounting:
-    one row per micro-batch (``rows_in``, ``rows_line_filtered``,
-    ``rows_langid``, ``rows_quality``, ``rows_repetition``,
-    ``rows_perplexity``, ``rows_deduped``, ``rows_decontaminated``;
-    disabled gates are NULL) written
-    idempotently to
-    ``out_path + "/_funnel"`` — the underscore prefix keeps funnel
-    rows invisible to readers of ``out_path`` (Hadoop hidden-path
-    convention), and per-stage sums over batches equal the batch
-    pipeline's report because every screen is per-doc.
+    ``with_funnel=True`` runs each micro-batch through the in-memory
+    runner and writes one funnel row per micro-batch (``rows_in``,
+    ``rows_line_filtered``, ``rows_langid``, ``rows_quality``,
+    ``rows_repetition``, ``rows_perplexity``, ``rows_deduped``,
+    ``rows_decontaminated``; disabled gates are NULL) idempotently to
+    ``out_path + "/_funnel"`` — the underscore prefix keeps funnel rows
+    invisible to readers of ``out_path`` (Hadoop hidden-path
+    convention).  Without it no stage is counted.
 
     Intra-batch/cross-batch self-dedup is deliberately NOT done here
     (it would break that parity and is the corpus-refresh job's
@@ -478,107 +466,45 @@ def ingest_sink(stream_docs: DataFrame, corpus: DataFrame,
 
     Returns the started StreamingQuery; caller awaits/stops it.
     """
-    from ..operators.dedup import (
-        benchmark_contamination,
-        incremental_near_dups_md5,
-    )
-    from ..pipelines import _c4_line_stage, _langid_gate, \
-        _perplexity_gate, _quality_gate
+    from ..operators.dedup import incremental_near_dups_md5
+    from ..pipelines import (_corpus_stages, _rows, _run_in_memory,
+                             _run_lazy, _Stage)
 
-    # same language-column resolution as the batch pipeline: the
-    # caller's lang_col, else the langid stage's attached prediction
-    wants_lang = quality_model in ("gopher", "gopher+rep")
-    attach = ("__langid_pred" if wants_lang and lang_col is None
-              and lang_models is not None and allowed_langs else None)
-    eff_lang = lang_col if lang_col is not None else attach
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        funnel: dict[str, int | None] = {
-            "rows_line_filtered": None, "rows_langid": None,
-            "rows_quality": None, "rows_repetition": None,
-            "rows_perplexity": None}
-        if with_funnel:
-            funnel["rows_in"] = batch_df.count()
-        cur = batch_df
-        if c4_line_filter:
-            # C4's line rules run FIRST (the batch stage-0a order);
-            # a pure per-doc rewrite, so stream == batch trivially
-            cur = _c4_line_stage(cur, text_col)
-            if with_funnel:
-                funnel["rows_line_filtered"] = cur.count()
-        if lang_models is not None and allowed_langs:
-            cur = _langid_gate(cur, id_col, text_col, lang_models,
-                               allowed_langs, attach=attach)
-            if with_funnel:
-                funnel["rows_langid"] = cur.count()
-        if quality_model is not None:
-            # the batch pipeline's quality stage — the "heuristic"
-            # sentinel selects the default score gate, a rule-set
-            # sentinel the published conjunction, a (w, b) tuple the
-            # learned filter — as a per-batch static decision
-            # (r12 parity completion; r13 adds the full sentinel
-            # family + the two-screen "gopher+rep" decomposition)
-            qm = None if quality_model == "heuristic" else quality_model
-            if qm == "gopher+rep":
-                cur = _quality_gate(cur, id_col, text_col,
-                                    float(min_quality), "gopher",
-                                    lang_col=eff_lang)
-                if with_funnel:
-                    funnel["rows_quality"] = cur.count()
-                cur = _quality_gate(cur, id_col, text_col,
-                                    float(min_quality), "gopher_rep")
-                if with_funnel:
-                    funnel["rows_repetition"] = cur.count()
-            else:
-                cur = _quality_gate(cur, id_col, text_col,
-                                    float(min_quality), qm,
-                                    lang_col=eff_lang)
-                if with_funnel:
-                    funnel["rows_quality"] = cur.count()
-        if attach is not None:
-            cur = cur.drop(attach)
-        if unigram_vocab is not None and max_nats_per_token is not None:
-            cur = _perplexity_gate(cur, id_col, text_col,
-                                   unigram_vocab, max_nats_per_token)
-            if with_funnel:
-                funnel["rows_perplexity"] = cur.count()
+    def _screen(cur: DataFrame) -> DataFrame:
         dup_ids = (incremental_near_dups_md5(
             cur, corpus, id_col, text_col, num_hashes=num_hashes,
             bands=bands, threshold=threshold)
             .select(F.col("delta_id").alias(id_col)).distinct())
-        keep = cur.join(dup_ids, id_col, "anti")
-        if with_funnel:
-            funnel["rows_deduped"] = keep.count()
-        if eval_df is not None:
-            cont = benchmark_contamination(
-                keep, eval_df, id_col, text_col,
-                n=contamination_ngram).select(id_col)
-            keep = keep.join(cont, id_col, "anti")
-        if with_funnel:
-            keep = keep.persist()
-            funnel["rows_decontaminated"] = keep.count()
+        return cur.join(dup_ids, id_col, "anti")
+
+    stages = _corpus_stages(
+        id_col, text_col, min_quality=float(min_quality),
+        quality_model=None if quality_model == "heuristic"
+        else quality_model,
+        screen_quality=quality_model is not None,
+        lang_models=lang_models, allowed_langs=allowed_langs,
+        lang_col=lang_col, unigram_vocab=unigram_vocab,
+        max_nats_per_token=max_nats_per_token,
+        c4_line_filter=c4_line_filter,
+        dedup=_Stage("deduped", _screen, _rows("rows_deduped")),
+        span_dedup_n=None, eval_df=eval_df,
+        contamination_ngram=contamination_ngram)
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        if not with_funnel:
+            _idempotent_batch_write(_run_lazy(batch_df, stages),
+                                    batch_id, out_path)
+            return
+        keep, funnel = _run_in_memory(batch_df, stages)
         _idempotent_batch_write(keep, batch_id, out_path)
-        if with_funnel:
-            keep.unpersist()
-            spark = batch_df.sparkSession
-            _idempotent_batch_write(
-                spark.createDataFrame(
-                    [(funnel["rows_in"],
-                      funnel["rows_line_filtered"],
-                      funnel["rows_langid"],
-                      funnel["rows_quality"],
-                      funnel["rows_repetition"],
-                      funnel["rows_perplexity"],
-                      funnel["rows_deduped"],
-                      funnel["rows_decontaminated"])],
-                    "rows_in long, rows_line_filtered long, "
-                    "rows_langid long, "
-                    "rows_quality long, rows_repetition long, "
-                    "rows_perplexity long, rows_deduped long, "
-                    "rows_decontaminated long"),
-                batch_id, out_path + "/_funnel")
+        keep.unpersist()
+        _idempotent_batch_write(
+            batch_df.sparkSession.createDataFrame(
+                [tuple(funnel.get(k) for k in _INGEST_FUNNEL)],
+                ", ".join(f"{k} long" for k in _INGEST_FUNNEL)),
+            batch_id, out_path + "/_funnel")
 
     return (stream_docs.writeStream
             .foreachBatch(_apply)

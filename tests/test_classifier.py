@@ -392,3 +392,24 @@ def test_sql_round_vec_matches_decimal_reference():
         got, want = _sql_round_vec(x, nd), ref(x, nd)
         assert (got == want).all()
         assert (np.signbit(got) == np.signbit(want)).all()
+
+
+def test_driver_bias_term_matches_sql_order():
+    """Fuzz: the driver GD's per-doc bias-gradient term equals a
+    per-element replay of the distributed SQL's left-to-right
+    ``((p - y) * c) * B / n`` with ``c = n / B`` on random doubles —
+    where the regrouped ``(p - y) * ((n / B) * B / n)`` spelling
+    differs by an ulp on a sizeable share of them."""
+    import numpy as np
+
+    from datum_spark.operators.classifier import _bias_grad_terms
+
+    rng = np.random.default_rng(7)
+    resid = rng.uniform(-1.0, 1.0, 20000)
+    n = rng.integers(1, 5000, 20000).astype(np.float64)
+    for nb in (32.0, 256.0, 1000.0):
+        want = np.array([((r * (m / nb)) * nb) / m
+                         for r, m in zip(resid.tolist(), n.tolist())])
+        assert (_bias_grad_terms(resid, n, nb) == want).all()
+        # the fuzz has power: the regrouped spelling forks
+        assert (resid * ((n / nb) * nb / n) != want).any()

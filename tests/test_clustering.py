@@ -242,6 +242,26 @@ def test_driver_lloyd_matches_distributed(spark, monkeypatch):
     assert c_drv == c_dist
 
 
+def test_driver_vectors_null_vector_falls_back(spark, monkeypatch):
+    """A null vector, first or later in the collected frame, sends the
+    Lloyd finish back to the distributed loop instead of raising on the
+    driver (the same fallback ragged widths take)."""
+    import datum_spark.operators.clustering as cl
+    from datum_spark.operators.clustering import _driver_vectors
+
+    # a Python-built frame has no size estimate: open the gate so the
+    # collected vectors reach the null / width check
+    monkeypatch.setattr(cl, "_DRIVER_LLOYD_BYTES", float("inf"))
+    schema = "__e array<double>"
+    for rows in ([([1.0, 2.0],), (None,), ([3.0, 4.0],)],
+                 [(None,), ([3.0, 4.0],)],
+                 [([1.0, 2.0],), ([3.0],)]):
+        assert _driver_vectors(spark.createDataFrame(rows, schema)) is None
+    x = _driver_vectors(spark.createDataFrame(
+        [([1.0, 2.0],), ([3.0, 4.0],)], schema))
+    assert x.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+
+
 def test_driver_pq_lloyd_matches_distributed(spark, monkeypatch):
     import datum_spark.operators.clustering as cl
     from datum_spark.operators.similarity import pq_train_encode

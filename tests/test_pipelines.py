@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from datum_spark.pipelines import build_training_corpus
 from datum_spark.sources.registry import read_parquet_normalized
+from datum_spark.util import clear_operator_caches
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,7 +19,20 @@ def corpus(spark):
     return read_parquet_normalized(spark, f"{SF}/documents.parquet")
 
 
-def test_pipeline_end_to_end(spark, corpus, tmp_path):
+@pytest.fixture()
+def assert_released(spark):
+    """Start from an empty cache; the returned check asserts that the
+    in-memory runner unpersisted every stage boundary it persisted."""
+    spark.catalog.clearCache()
+
+    def check():
+        clear_operator_caches()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    return check
+
+
+def test_pipeline_end_to_end(spark, corpus, tmp_path, assert_released):
     eval_df = corpus.filter(F.col("doc_id") < 20)
     docs = corpus.filter(F.col("doc_id") >= 20)
     out = str(tmp_path / "shards")
@@ -26,6 +40,7 @@ def test_pipeline_end_to_end(spark, corpus, tmp_path):
         docs, eval_df, out, n_shards=4, min_quality=0.2,
         contamination_ngram=5,
         source_weights={"src0": 1.0}, default_weight=0.8)
+    assert_released()
 
     # monotone per-stage funnel, every stage did something sane
     assert (report["rows_in"] >= report["rows_quality"]
@@ -239,7 +254,8 @@ def test_pipeline_c4_quality_gate(spark, corpus, tmp_path):
     assert 0 < expect < report["rows_in"]      # the gate actually gates
 
 
-def test_pipeline_gopher_rep_and_composed_gates(spark, corpus, tmp_path):
+def test_pipeline_gopher_rep_and_composed_gates(spark, corpus, tmp_path,
+                                                assert_released):
     """quality_model="gopher_rep" gates on the Rae 2021 §A1.2
     repetition conjunction; "gopher+rep" composes §A1.1 AND §A1.2 as
     TWO funnel stages (rows_quality = page-shape survivors,
@@ -258,6 +274,7 @@ def test_pipeline_gopher_rep_and_composed_gates(spark, corpus, tmp_path):
     _, both = build_training_corpus(
         docs, None, str(tmp_path / "both"), n_shards=2,
         quality_model="gopher+rep")
+    assert_released()
     g_ids = (gopher_rules(docs, "text")
              .filter(F.col("gopher_pass")).select("doc_id"))
     n_g = g_ids.count()
@@ -344,7 +361,8 @@ def test_pipeline_langid_prediction_feeds_gopher_gate(spark, corpus,
     assert "__langid_pred" not in back.columns
 
 
-def test_pipeline_span_dedup_stage(spark, corpus, tmp_path):
+def test_pipeline_span_dedup_stage(spark, corpus, tmp_path,
+                                   assert_released):
     """span_dedup_n wires the ExactSubstr action into the funnel after
     doc-level dedup: surviving docs are rewritten (keep-first span
     removal), emptied docs drop, and the report carries
@@ -365,6 +383,7 @@ def test_pipeline_span_dedup_stage(spark, corpus, tmp_path):
     kw = dict(n_shards=2, min_quality=0.0, span_dedup_n=8)
     _s, report = build_training_corpus(docs, None,
                                        str(tmp_path / "sp"), **kw)
+    assert_released()
     assert "rows_span_dedup" in report
     assert report["span_words_removed"] > 0       # fixture has dups
     assert (report["rows_deduped"] >= report["rows_span_dedup"]
@@ -409,7 +428,8 @@ def test_pipeline_span_dedup_stage(spark, corpus, tmp_path):
         assert r1[k] == r2[k] == report[k]
 
 
-def test_pipeline_c4_line_filter_stage(spark, corpus, tmp_path):
+def test_pipeline_c4_line_filter_stage(spark, corpus, tmp_path,
+                                       assert_released):
     """c4_line_filter=True rewrites docs through C4's line rules BEFORE
     every gate, drops emptied docs, and reports rows_line_filtered; the
     resumable run resumes through the new first checkpoint."""
@@ -423,6 +443,7 @@ def test_pipeline_c4_line_filter_stage(spark, corpus, tmp_path):
     kw = dict(n_shards=2, min_quality=0.0, c4_line_filter=True)
     _s, report = build_training_corpus(docs, None,
                                        str(tmp_path / "lf"), **kw)
+    assert_released()
     expect_docs = (c4_clean_lines(docs, "text")
                    .filter(F.col("n_lines_kept") > 0))
     n_expect = expect_docs.count()
