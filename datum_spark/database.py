@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 
 from . import util
 from .functions.dialect import translate_sql
+from .functions.geometry_sql import register_called_functions
 from .session import get_session
 from .table import Table
 
@@ -214,26 +215,17 @@ class Database:
         self._table_df(name).createOrReplaceTempView(name)
         self._registered.add(name)
 
-    def ensure_geom_fns(self) -> None:
-        """Idempotently register the ST_* SQL pack (used by the execute()
-        gateway AND by ``where=`` fragments on Table.query/read — reference
-        users wrote PostGIS functions in both places), plus the text
-        cleaning pack (normalize_text / token_count)."""
-        if not getattr(self, "_geom_fns_registered", False):
-            from .functions.geometry_sql import (
-                register_geometry_sql_functions,
-            )
-            from .operators.text import register_text_sql_functions
-
-            register_geometry_sql_functions(self.spark)
-            register_text_sql_functions(self.spark)
-            self._geom_fns_registered = True
-
     def register_all(self) -> None:
         for name in self.tables:
             self._register(name)
         self._restore_views()
-        self.ensure_geom_fns()
+
+    def _translate(self, stmt: str) -> str:
+        """The dialect-shimmed statement, with the ST_*/text functions it
+        calls registered (the gateway's one path to Spark)."""
+        stmt = translate_sql(stmt)
+        register_called_functions(self.spark, stmt)
+        return stmt
 
     # -- SQL gateway (Tier B) -------------------------------------------------
 
@@ -245,7 +237,7 @@ class Database:
         goes through Spark's own parser (no string splicing, §1.4#7).
         """
         self.register_all()
-        df = self.spark.sql(translate_sql(stmt))
+        df = self.spark.sql(self._translate(stmt))
         if not df.columns:
             return None
         return [row.asDict() for row in df.collect()]
@@ -254,7 +246,7 @@ class Database:
         """Spark-native variant of :meth:`execute`: returns the DataFrame
         (lazy logical plan) instead of collecting."""
         self.register_all()
-        return self.spark.sql(translate_sql(stmt))
+        return self.spark.sql(self._translate(stmt))
 
     # -- DDL -----------------------------------------------------------------
 
@@ -385,7 +377,8 @@ class Database:
         util.check_identifier(name)
         self.register_all()
         self.spark.sql(
-            f"CREATE OR REPLACE TEMP VIEW {name} AS {translate_sql(select_stmt)}")
+            f"CREATE OR REPLACE TEMP VIEW {name} AS "
+            f"{self._translate(select_stmt)}")
         self._views.add(name)
         if self.scheme == "file":
             views = self._load_meta("_views")
@@ -411,7 +404,7 @@ class Database:
             for table in self.tables:
                 self._register(table)
             self.spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} "
-                           f"AS {translate_sql(stmt)}")
+                           f"AS {self._translate(stmt)}")
             self._views.add(name)
 
     def create_mview(self, name: str, select_stmt: str) -> None:
@@ -419,7 +412,7 @@ class Database:
         (reference: ``datum/postgis/database.py:118-121``)."""
         util.check_identifier(name)
         self.register_all()
-        df = self.spark.sql(translate_sql(select_stmt))
+        df = self.spark.sql(self._translate(select_stmt))
         self._write_table(name, df, mode="overwrite")
         self._mviews.add(name)
         self._register(name)

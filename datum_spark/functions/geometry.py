@@ -466,6 +466,13 @@ def _snaptogrid_one(wkt, size: float):
     return _re.sub(_COORD_RE, repl, wkt)
 
 
+# every name register_vertex_ops registers (it calls register_overlay_ops)
+VECTOR_OPS = frozenset({
+    "st_simplify", "st_convexhull", "st_transform", "st_snaptogrid",
+    "st_intersection", "st_union", "st_difference", "st_symdifference",
+    "st_buffer", "st_isvalid", "st_isvalidreason", "st_makevalid"})
+
+
 def register_vertex_ops(spark) -> None:
     """Register st_simplify(wkt, tol) / st_convexhull(wkt) /
     st_transform(wkt, from_srid, to_srid) as SQL functions

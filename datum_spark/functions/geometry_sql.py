@@ -7,9 +7,21 @@ pure catalyst expressions, JVM-side and codegen-friendly, NOT Python UDFs.
 Geometry stays WKT text end-to-end, matching the engine's storage model
 (the reference itself stores geom as text, ``datum/postgis/database.py:
 83-88``).
+
+Registering a function is a ``CREATE TEMPORARY FUNCTION`` that Spark
+analyzes on the driver: all 59 bodies take ~8 s on a cold 4-core JVM
+(``st_centroid``'s 57 KB body alone over 1 s).  So the gateway registers
+on demand: each statement it sends to Spark is scanned for the pack
+names it calls, and only those, plus the helpers their bodies call, are
+registered, once per session (:func:`register_called_functions`).  Raw
+``spark.sql`` text sees only what was registered before it; call
+:func:`register_geometry_sql_functions` first to get the whole pack.
 """
 
 from __future__ import annotations
+
+import re
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -1205,27 +1217,85 @@ _FUNCTIONS["st_boundary"] = (
     "ELSE NULL END")
 
 
-def register_geometry_sql_functions(spark: SparkSession,
-                                    force: bool = False) -> None:
-    """Idempotently register the ST_* pack as temporary SQL functions.
+# ---------------------------------------------------------------------------
+# On-demand registration (module docstring), one registry per session.
 
-    Helpers (``st__*``) are referenced by later bodies, so registration
-    follows dict insertion order.  Analyzing the ~30 CREATE FUNCTION
-    bodies costs ~1 s, so a session that already has the pack is
-    skipped (marker attribute on the session; ``force`` re-registers —
-    e.g. after a ``DROP TEMPORARY FUNCTION``).
+# a pack name called in SQL text: st_* (st__* helpers included) or a
+# text-pack name, in any case, before its "("
+_CALL = re.compile(r"\b(st_\w+|normalize_text|token_count)\s*\(",
+                   re.IGNORECASE)
+
+
+def _calls(sql: str) -> set[str]:
+    return {m.lower() for m in _CALL.findall(sql)}
+
+
+# name -> every pack function its body calls, transitively.  A body
+# only calls names defined before it (tests/test_sql_pack.py checks),
+# so one pass in insertion order closes each set.
+_HELPERS: dict[str, frozenset[str]] = {}
+for _n, (_, _, _body) in _FUNCTIONS.items():
+    _direct = _calls(_body) & _HELPERS.keys()
+    _HELPERS[_n] = frozenset(_direct).union(
+        *(_HELPERS[d] for d in _direct))
+
+_LOCK = threading.Lock()
+
+
+def _registered(spark: SparkSession) -> set[str]:
+    """The names this session has registered (kept on the session)."""
+    done = getattr(spark, "_datum_sql_functions", None)
+    if done is None:
+        done = set()
+        try:
+            spark._datum_sql_functions = done
+        except AttributeError:  # exotic session proxies: re-register
+            pass
+    return done
+
+
+def register_sql_functions(spark: SparkSession, names) -> None:
+    """Register the pack functions in ``names`` that ``spark`` has not
+    registered yet, plus the helpers their bodies call, in ``_FUNCTIONS``
+    order (helpers first).  Names outside the pack are ignored."""
+    from ..operators.text import TEXT_SQL_FUNCTIONS
+    from .geometry import VECTOR_OPS, register_vertex_ops
+
+    want = set(names)
+    for n in want & _HELPERS.keys():
+        want |= _HELPERS[n]
+    with _LOCK:
+        done = _registered(spark)
+        want -= done
+        if not want:
+            return
+        for name, (sig, ret, body) in (*_FUNCTIONS.items(),
+                                       *TEXT_SQL_FUNCTIONS.items()):
+            if name in want:
+                spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
+                          f"RETURNS {ret} RETURN {body}")
+                done.add(name)
+        # st_simplify / st_transform / the overlay ops: pandas-UDF-backed
+        # (vertex reduction needs a stack), registered as one group
+        if want & VECTOR_OPS:
+            register_vertex_ops(spark)
+            done |= VECTOR_OPS
+
+
+def register_called_functions(spark: SparkSession, sql: str) -> None:
+    """Register the pack functions the SQL text ``sql`` calls — what the
+    gateway does with every statement it sends to Spark."""
+    register_sql_functions(spark, _calls(sql))
+
+
+def register_geometry_sql_functions(spark: SparkSession) -> None:
+    """Register the whole ST_* pack (SQL bodies and the pandas-UDF ops)
+    as temporary functions; a no-op for names already registered.
+
+    The datum gateway needs no call: it registers the functions each
+    statement names.  Raw ``spark.sql`` text that calls the pack needs
+    this call first (or ``register_called_functions(spark, text)``).
     """
-    if not force and getattr(spark, "_datum_st_registered", False):
-        return
-    for name, (sig, ret, body) in _FUNCTIONS.items():
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
-                  f"RETURNS {ret} RETURN {body}")
-    # st_simplify / st_convexhull: pandas-UDF-backed (vertex reduction
-    # needs a stack — the only ST_* pair that leaves the JVM)
-    from .geometry import register_vertex_ops
+    from .geometry import VECTOR_OPS
 
-    register_vertex_ops(spark)
-    try:
-        spark._datum_st_registered = True
-    except AttributeError:      # exotic session proxies: just re-register
-        pass
+    register_sql_functions(spark, _FUNCTIONS.keys() | VECTOR_OPS)

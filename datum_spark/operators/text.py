@@ -965,17 +965,14 @@ def normalize_text_oracle_sql(expr: str) -> str:
     return f"trim({out})"
 
 
-def register_text_sql_functions(spark, force: bool = False) -> None:
-    """Idempotently expose the text-cleaning pack to the SQL gateway as
-    temporary functions (same mechanism as the ST_* pack):
+def _text_sql_functions() -> dict[str, tuple[str, str, str]]:
+    """The text-cleaning pack as SQL function bodies, in the ST_* pack's
+    ``name -> (signature, return type, body)`` form:
 
     - ``normalize_text(s)`` — :func:`normalize_text`, built from the
       SAME ordered replace tables (one source of truth);
     - ``token_count(s)`` — whitespace token count.
     """
-    if not force and getattr(spark, "_datum_text_registered", False):
-        return
-
     def sql_quote(t: str) -> str:
         return "'" + t.replace("\\", "\\\\").replace("'", "''") + "'"
 
@@ -987,13 +984,12 @@ def register_text_sql_functions(spark, force: bool = False) -> None:
     ctrl = ("'[\\u0000-\\u0008\\u000B\\u000C\\u000E-\\u001F\\u007F]'")
     body = f"regexp_replace({body}, {ctrl}, '')"
     body = f"regexp_replace({body}, '\\\\s+', ' ')"
-    spark.sql("CREATE OR REPLACE TEMPORARY FUNCTION normalize_text"
-              f"(s STRING) RETURNS STRING RETURN trim({body})")
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION token_count(s STRING) "
-        "RETURNS INT RETURN "
-        "size(filter(split(lower(s), '\\\\s+'), t -> t != ''))")
-    try:
-        spark._datum_text_registered = True
-    except AttributeError:
-        pass
+    return {
+        "normalize_text": ("(s STRING)", "STRING", f"trim({body})"),
+        "token_count": ("(s STRING)", "INT",
+                        "size(filter(split(lower(s), '\\\\s+'), "
+                        "t -> t != ''))"),
+    }
+
+
+TEXT_SQL_FUNCTIONS = _text_sql_functions()

@@ -31,6 +31,7 @@ from .functions.geometry import (
     reproject_wkt,
     scrub_m_values,
 )
+from .functions.geometry_sql import register_called_functions
 
 
 class Table:
@@ -162,10 +163,10 @@ class Table:
 
         if where:
             # where= fragments may call ST_* (reference users filtered on
-            # PostGIS functions); make the SQL pack available on the read
-            # path, not just through execute()
-            self.db.ensure_geom_fns()
-            df = df.filter(F.expr(translate_predicate(where)))
+            # PostGIS functions): register the ones this fragment names
+            pred = translate_predicate(where)
+            register_called_functions(self.db.spark, pred)
+            df = df.filter(F.expr(pred))
         if sort is not None:
             df = df.orderBy(*self._sort_exprs(sort, aliases))
         if limit is not None:

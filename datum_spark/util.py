@@ -144,26 +144,34 @@ def ensure_parallelism(df, min_partitions: int | None = None):
                 local = False
                 break
         if local:
-            est = _estimate_scan_partitions(spark, sizes, target)
+            est = _estimate_scan_partitions(spark, sizes)
             return df if est >= target else df.repartition(target)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 
 
-def _estimate_scan_partitions(spark, sizes: list[int], target: int) -> int:
+def _estimate_scan_partitions(spark, sizes: list[int]) -> int:
     """Simulate FilePartition bin-packing (FilePartition.getFilePartitions):
     split big files at maxSplitBytes, sort chunks descending, pack greedily
     with each chunk padded by openCostInBytes.  This is why many tiny
-    files collapse into few scan partitions — ~2 per bin at the defaults."""
+    files collapse into few scan partitions — ~2 per bin at the defaults.
+
+    maxSplitBytes divides the padded total by Spark's own divisor
+    (FilePartition.maxSplitBytes): ``spark.sql.files.minPartitionNum``,
+    else ``spark.sql.leafNodeDefaultParallelism``, else the context's
+    default parallelism — not by the caller's target partition count."""
     if not sizes:
         return 0
     max_split = _bytes_conf(
         spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
     open_cost = _bytes_conf(
         spark, "spark.sql.files.openCostInBytes", 4 << 20)
+    divisor = (_int_conf(spark, "spark.sql.files.minPartitionNum")
+               or _int_conf(spark, "spark.sql.leafNodeDefaultParallelism")
+               or spark.sparkContext.defaultParallelism)
     padded = sum(sizes) + len(sizes) * open_cost
-    split = min(max_split, max(open_cost, padded // max(target, 1) or 1))
+    split = min(max_split, max(open_cost, padded // max(divisor, 1) or 1))
     chunks = []
     for s in sizes:
         while s > split:
@@ -178,6 +186,14 @@ def _estimate_scan_partitions(spark, sizes: list[int], target: int) -> int:
             cur = 0
         cur += s + open_cost
     return bins
+
+
+def _int_conf(spark, key: str) -> int | None:
+    """An optional integer Spark conf; None when unset or unreadable."""
+    try:
+        return int(spark.conf.get(key, None))
+    except Exception:  # noqa: BLE001 — unset (None), or not an int
+        return None
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
@@ -216,10 +232,14 @@ def _bytes_conf(spark, key: str, default: int) -> int:
 # frees older ones; an evicted cache that some still-unexecuted plan
 # references just recomputes (correct, slower).
 
+import threading as _threading
 from collections import deque as _deque
 
 _CACHE_RING = _deque()
 _CACHE_RING_CAP = 8
+# ops may run on several threads: the scan, append, eviction and clear
+# of the ring happen under this one lock
+_CACHE_RING_LOCK = _threading.Lock()
 
 
 def retain_cache(df):
@@ -239,34 +259,36 @@ def retain_cache(df):
         plan = df._jdf.queryExecution().analyzed()
     except Exception:  # noqa: BLE001 — connect-mode / mock frames
         plan = None
-    if plan is not None:
-        for i, (old_plan, _old) in enumerate(_CACHE_RING):
+    with _CACHE_RING_LOCK:
+        if plan is not None:
+            for i, (old_plan, _old) in enumerate(_CACHE_RING):
+                try:
+                    hit = old_plan is not None and plan.sameResult(old_plan)
+                except Exception:  # noqa: BLE001
+                    hit = False
+                if hit:
+                    _CACHE_RING.append(_CACHE_RING[i])
+                    del _CACHE_RING[i]
+                    return cached
+        _CACHE_RING.append((plan, cached))
+        while len(_CACHE_RING) > _CACHE_RING_CAP:
+            _, old = _CACHE_RING.popleft()
             try:
-                hit = old_plan is not None and plan.sameResult(old_plan)
-            except Exception:  # noqa: BLE001
-                hit = False
-            if hit:
-                _CACHE_RING.append(_CACHE_RING[i])
-                del _CACHE_RING[i]
-                return cached
-    _CACHE_RING.append((plan, cached))
-    while len(_CACHE_RING) > _CACHE_RING_CAP:
-        _, old = _CACHE_RING.popleft()
-        try:
-            old.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
+                old.unpersist(False)
+            except Exception:  # noqa: BLE001 — session may be stopped
+                pass
     return cached
 
 
 def clear_operator_caches() -> None:
     """Unpersist every operator-internal cache (e.g. at pipeline end)."""
-    while _CACHE_RING:
-        _, old = _CACHE_RING.popleft()
-        try:
-            old.unpersist(False)
-        except Exception:  # noqa: BLE001
-            pass
+    with _CACHE_RING_LOCK:
+        while _CACHE_RING:
+            _, old = _CACHE_RING.popleft()
+            try:
+                old.unpersist(False)
+            except Exception:  # noqa: BLE001
+                pass
 
 
 def estimated_bytes(df) -> int:

@@ -2792,6 +2792,36 @@ def test_retain_cache_ring_dedups_equal_plans(spark):
     assert len(_CACHE_RING) == 0
 
 
+def test_retain_cache_ring_thread_safe(spark):
+    """Ops running on several threads enrol into the one ring: the scan
+    of one thread must not see another's append or eviction ("deque
+    mutated during iteration"), and the cap must hold."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from datum_spark.util import (_CACHE_RING, _CACHE_RING_CAP,
+                                  clear_operator_caches, retain_cache)
+
+    clear_operator_caches()
+
+    def enrol(t):
+        for j in range(20):
+            retain_cache(spark.range(t * 100 + j + 1))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(enrol, t) for t in range(8)]
+            for f in futures:
+                f.result(timeout=300)  # re-raises a thread's error
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(_CACHE_RING) <= _CACHE_RING_CAP
+    clear_operator_caches()
+    assert len(_CACHE_RING) == 0
+
+
 def test_ngram_jaccard_count_based_matches_array_verify(spark):
     """r14: with no hot-gram cap, ngram_jaccard_pairs computes jaccard
     from colliding-posting COUNTS; with a (vacuously large) cap it runs

@@ -198,7 +198,7 @@ def test_ensure_parallelism_many_tiny_files(spark, tmp_path):
     import os
 
     sizes = [os.path.getsize(f.removeprefix("file:")) for f in df.inputFiles()]
-    assert _estimate_scan_partitions(spark, sizes, 32) == \
+    assert _estimate_scan_partitions(spark, sizes) == \
         df.rdd.getNumPartitions()
     assert ensure_parallelism(df, 32).rdd.getNumPartitions() >= 32
 
