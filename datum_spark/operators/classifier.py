@@ -439,12 +439,13 @@ def quality_classifier_fit_sgd(df: DataFrame, id_col: str,
                                avg_lr_decay: float = 1.0,
                                audit_sink: list | None = None):
     """THROUGHPUT twin of :func:`quality_classifier_fit` — parallel
-    mini-batch SGD (Zinkevich et al. 2010): each partition runs
-    sequential SGD over its shard (NumPy, Arrow-batched), then the
-    shard weights average doc-weighted — ONE corpus pass per epoch
-    instead of one per GD step, so a 12-step full-batch budget becomes
-    2 passes.  Communication per epoch: n_partitions × (n_buckets + 2)
-    floats, no per-step driver round-trips.
+    mini-batch SGD (Zinkevich et al. 2010): each md5 shard runs its
+    own sequential SGD (NumPy, Arrow-batched), then the shard weights
+    average doc-weighted — ONE corpus pass per epoch instead of one per
+    GD step, so a 12-step full-batch budget becomes 2 passes.  Shards
+    that Spark co-locates in one partition still train separately.
+    Communication per epoch: n_shards × (n_buckets + 2) floats, no
+    per-step driver round-trips.
 
     Determinism: run-to-run reproducible (docs shard and order by
     ``md5(id, seed-epoch)`` — partitioning-independent), but NOT the
@@ -496,19 +497,22 @@ def quality_classifier_fit_sgd(df: DataFrame, id_col: str,
         sharded = (feat.withColumn("__k", key)
                        .withColumn("__p", F.pmod(F.col("__k"), n_parts))
                        .repartition(n_parts, F.col("__p"))
-                       .sortWithinPartitions("__k", "__id"))
+                       .sortWithinPartitions("__p", "__k", "__id"))
         w0, b0 = w.copy(), bias
         eff_lr = lr * (avg_lr_decay ** epoch)
 
         def shard_sgd(pdfs):
-            # ONE sequential SGD per PARTITION: state carries across
-            # Arrow chunks, and mini-batches fill from a row buffer so
-            # batch boundaries are independent of
-            # arrow.maxRecordsPerBatch (resetting per chunk — the
-            # original bug — both discarded progress and made the
-            # result depend on the Arrow chunking)
+            # ONE sequential SGD per SHARD key __p, whatever partition
+            # Spark placed it in (the partitioner may co-locate shards):
+            # rows arrive sorted by (__p, __k, __id), so a shard is one
+            # contiguous run that may span Arrow chunks or share a chunk
+            # with its neighbour.  State carries across chunks and
+            # mini-batches fill from a row buffer, so batch boundaries
+            # are independent of arrow.maxRecordsPerBatch; when __p
+            # changes, the finished shard flushes its partial batch and
+            # emits its row, and the next restarts from (w0, b0).
             lw, lb, seen = w0.copy(), b0, 0
-            part = -1
+            part = None
             buf: list = []
 
             def step(batch):
@@ -532,19 +536,26 @@ def quality_classifier_fit_sgd(df: DataFrame, id_col: str,
                 lb -= eff_lr * gbias / m
                 seen += m
 
+            def finish():
+                if buf:
+                    step(buf)
+                return pd.DataFrame({"part": [part], "n": [seen],
+                                     "w": [lw.tolist()], "b": [lb]})
+
             for pdf in pdfs:
-                if part < 0 and len(pdf):
-                    part = int(pdf["__p"].iloc[0])
-                buf.extend(zip(pdf["__bs"], pdf["__cs"],
-                               pdf["__n"], pdf["__y"]))
-                while len(buf) >= batch_size:
-                    step(buf[:batch_size])
-                    buf = buf[batch_size:]
-            if buf:
-                step(buf)
-            if seen:
-                yield pd.DataFrame({"part": [part], "n": [seen],
-                                    "w": [lw.tolist()], "b": [lb]})
+                for sp, *row in zip(pdf["__p"], pdf["__bs"], pdf["__cs"],
+                                    pdf["__n"], pdf["__y"]):
+                    if sp != part:
+                        if part is not None:
+                            yield finish()
+                        part, buf = int(sp), []
+                        lw, lb, seen = w0.copy(), b0, 0
+                    buf.append(row)
+                    if len(buf) == batch_size:
+                        step(buf)
+                        buf = []
+            if part is not None:
+                yield finish()
 
         parts = sharded.mapInPandas(shard_sgd, schema).collect()
         total = sum(r["n"] for r in parts)

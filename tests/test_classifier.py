@@ -238,6 +238,34 @@ def test_sgd_audit_sink_replays_averaging(spark):
         assert len({r["shard"] for r in sh}) == len(sh)
 
 
+@pytest.mark.parametrize("cpus", [4, 8, 32])
+def test_sgd_trains_each_md5_shard_separately(spark, monkeypatch, cpus):
+    """One audit record per md5 shard, holding exactly that shard's docs,
+    whatever partition Spark's partitioner places the shard in: the
+    audited ``{shard: n}`` equals an independent count of
+    ``pmod(md5_bucket(id, salt), n_parts)`` (n_parts = 2, 4, 16)."""
+    from datum_spark.operators.classifier import quality_classifier_fit_sgd
+    from datum_spark.operators.sampling import md5_bucket
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
+    n_parts = max(2, cpus // 2)
+    rows = [(i, f"apple banana w{i % 17} apple", 1) for i in range(200)] \
+        + [(i + 1000, f"cat dog w{i % 13} mouse", 0) for i in range(200)]
+    toy = spark.createDataFrame(rows, "doc_id long, text string, y int")
+    audit: list = []
+    quality_classifier_fit_sgd(toy, "doc_id", "text", "y", n_buckets=32,
+                               epochs=2, batch_size=32, audit_sink=audit)
+    for e in (0, 1):
+        got = {r["shard"]: r["n"] for r in audit
+               if r["epoch"] == e and r["shard"] >= 0}
+        shard = F.pmod(md5_bucket(F.col("doc_id"), salt=f"qclf-sgd-42-{e}"),
+                       n_parts)
+        want = {r["s"]: r["n"] for r in
+                toy.groupBy(shard.alias("s")).agg(F.count("*").alias("n"))
+                .collect()}
+        assert got == want
+
+
 def test_gate_agreement_kappa_properties(spark):
     """kappa = 1 on identical gates, ~0 on independent ones, NULL on a
     degenerate single-cell table; confusion counts exact."""
