@@ -49,7 +49,8 @@ class Database:
         self._memory_tables: dict[str, DataFrame] = {}
         self._views: set[str] = set()
         self._mviews: set[str] = set()
-        self._registered: set[str] = set()
+        # table name → the DataFrame its temp view was last bound to
+        self._bound: dict[str, DataFrame] = {}
 
     def __str__(self) -> str:
         """Reference shape ``Database: scheme://.../name`` with credentials
@@ -155,7 +156,6 @@ class Database:
             # materialize to avoid recompute chains on repeated appends
             self._memory_tables[name] = self.spark.createDataFrame(
                 df.collect(), df.schema)
-            self._registered.discard(name)  # view must see the new data
             self._register(name)
             return
         if self.scheme == "jdbc":
@@ -169,7 +169,6 @@ class Database:
             # on them prune whole directories (PartitionFilters) at scale
             writer = writer.partitionBy(*part_cols)
         writer.parquet(self._table_path(name))
-        self._registered.discard(name)  # re-register to pick up new data
 
     def _rewrite_table(self, name: str, df: DataFrame) -> None:
         """Replace a table's files with ``df``'s data via write-then-swap.
@@ -206,14 +205,18 @@ class Database:
             os.rename(old, path)  # roll back: the table stays readable
             raise
         shutil.rmtree(old)
-        self._registered.discard(name)
 
     def _register(self, name: str) -> None:
-        """Expose a table as a temp view so ``execute`` SQL can see it."""
-        if name in self._registered:
+        """Expose a table as a temp view so ``execute`` SQL can see it.
+
+        The view is re-bound only when ``_table_df`` returns a different
+        DataFrame than last time — for a file table, when the scan memo
+        saw its files change, whoever changed them."""
+        df = self._table_df(name)
+        if self._bound.get(name) is df:
             return
-        self._table_df(name).createOrReplaceTempView(name)
-        self._registered.add(name)
+        df.createOrReplaceTempView(name)
+        self._bound[name] = df
 
     def register_all(self) -> None:
         for name in self.tables:
@@ -322,9 +325,8 @@ class Database:
             meta = self._meta_path(name)
             if os.path.exists(meta):
                 os.remove(meta)
-        if name in self._registered:
+        if self._bound.pop(name, None) is not None:
             self.spark.catalog.dropTempView(name)
-            self._registered.discard(name)
 
     # -- adapter-level conveniences (reference: Oracle adapter exposed these
     # directly on the database object) --------------------------------------
@@ -555,11 +557,11 @@ class Database:
 
     def close(self, stop_spark: bool = False) -> None:
         """Release catalog state; optionally stop the SparkSession."""
-        for name in list(self._registered):
+        for name in self._bound:
             try:
                 self.spark.catalog.dropTempView(name)
             except Exception:
                 pass
-        self._registered.clear()
+        self._bound.clear()
         if stop_spark:
             self.spark.stop()

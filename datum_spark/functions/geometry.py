@@ -142,6 +142,13 @@ def linearize_circularstring(wkt: str,
     return f"LINESTRING ({coords})"
 
 
+def is_curve_wkt(wkt: str) -> bool:
+    """Whether :func:`curve_to_line` acts on this WKT (linearizes or
+    rejects it): a CIRCULARSTRING or any ``*CURVE*`` type."""
+    head = wkt.lstrip()[:16].upper()
+    return head.startswith("CIRCULARSTRING") or "CURVE" in head
+
+
 def curve_to_line(col: Column) -> Column:
     """ST_CurveToLine analog over a WKT column: CIRCULARSTRING is
     chord-linearized; COMPOUNDCURVE / CURVEPOLYGON / MULTICURVE raise a
@@ -156,18 +163,16 @@ def curve_to_line(col: Column) -> Column:
     @F.pandas_udf("string")
     def _f(s: pd.Series) -> pd.Series:
         def one(w):
-            if w is None:
-                return None
+            if w is None or not is_curve_wkt(w):
+                return w
             head = w.lstrip()[:16].upper()
             if head.startswith("CIRCULARSTRING"):
                 return linearize_circularstring(w)
-            if "CURVE" in head:
-                raise NotImplementedError(
-                    f"curve geometry {head.split()[0].split('(')[0]} is not "
-                    "supported on write: only CIRCULARSTRING is "
-                    "linearized (reference delegated to PostGIS "
-                    "ST_CurveToLine, datum/postgis/table.py:189-191)")
-            return w
+            raise NotImplementedError(
+                f"curve geometry {head.split()[0].split('(')[0]} is not "
+                "supported on write: only CIRCULARSTRING is "
+                "linearized (reference delegated to PostGIS "
+                "ST_CurveToLine, datum/postgis/table.py:189-191)")
         return s.map(one)
     return _f(col)
 

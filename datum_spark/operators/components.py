@@ -30,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..util import local_frame
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -153,10 +156,9 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     prev_sum = _checksum(cur)
     if prev_sum[0] <= _DRIVER_CC_EDGES:
         out = _driver_components(cur.collect(), include_roots)
-        child_t = cur.schema["child"].dataType.simpleString()
-        parent_t = cur.schema["parent"].dataType.simpleString()
-        return spark.createDataFrame(
-            out, schema=f"node {child_t}, component {parent_t}")
+        return local_frame(spark, out, T.StructType([
+            T.StructField("node", cur.schema["child"].dataType),
+            T.StructField("component", cur.schema["parent"].dataType)]))
     for _ in range(max_iter):
         nxt = _small_star(_large_star(_symmetrize(cur))).localCheckpoint()
         new_sum = _checksum(nxt)

@@ -14,6 +14,10 @@ silently.
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 SUPPORTED_FORMATS = ("parquet", "csv", "json", "orc", "jdbc",
@@ -95,7 +99,59 @@ def ensure_nanos_readable(spark: SparkSession, path: str) -> None:
         spark.conf.set(_NANOS_CONF, "true")
 
 
+def _path_signature(path: str) -> tuple:
+    """Name, size and ``mtime_ns`` of every file under ``path`` (or of
+    ``path`` itself when it is a file): any write, rewrite or file drop
+    changes it, from whichever handle or process it came."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_size, st.st_mtime_ns),)
+    sig = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in sorted(files):
+            try:
+                fst = os.stat(os.path.join(root, name))
+            except FileNotFoundError:   # removed while we listed
+                continue
+            sig.append((root, name, fst.st_size, fst.st_mtime_ns))
+    return tuple(sig)
+
+
+_SCAN_LOCK = threading.Lock()
+
+
 def read_parquet_normalized(spark: SparkSession, path: str) -> DataFrame:
+    """The normalized scan of ``path``, memoized per session until the
+    path's files change.
+
+    A memo hit returns the SAME DataFrame object — an unmaterialized,
+    already-analyzed scan plan, so its schema and file listing cost
+    nothing — and skips the footer probes and Spark's one-task schema
+    job.  The key is the path's signature (:func:`_path_signature`), so
+    a write made through any handle or process is seen on the next call
+    with no version bookkeeping.  Callers may compare the returned object
+    with ``is`` to learn whether the table changed.
+    """
+    key = os.path.normpath(path)
+    try:
+        sig = _path_signature(key)
+    except OSError:     # not a local path: nothing to key on
+        return _read_parquet_normalized(spark, path)
+    with _SCAN_LOCK:
+        memo = getattr(spark, "_datum_scans", None)
+        if memo is None:
+            memo = spark._datum_scans = {}
+        hit = memo.get(key)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    df = _read_parquet_normalized(spark, path)
+    with _SCAN_LOCK:
+        memo[key] = (sig, df)
+    return df
+
+
+def _read_parquet_normalized(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan that tolerates TIMESTAMP(NANOS) columns.
 
     Spark's Parquet reader rejects nanosecond timestamps; with

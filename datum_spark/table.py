@@ -27,11 +27,15 @@ from .functions.geometry import (
     curve_to_line,
     empty_wkt,
     force_2d,
+    is_curve_wkt,
     multi_cast,
     reproject_wkt,
     scrub_m_values,
 )
 from .functions.geometry_sql import register_called_functions
+
+# one group key for every NaN, as Spark's grouping normalizes NaN
+_NAN = object()
 
 
 class Table:
@@ -43,7 +47,6 @@ class Table:
         self.schema, self.name = util.split_schema(util.check_identifier(name))
         self.qualified_name = name
         self._meta_cache: dict | None = None
-        self._schema_cache = None
 
     def __str__(self) -> str:
         """Reference shape ``Table: schema.name`` (``datum/table.py:27-32``)."""
@@ -67,11 +70,11 @@ class Table:
 
     @property
     def _schema(self):
-        if self._schema_cache is None:
-            # Parquet footers make introspection free (SURVEY §1.3) — the
-            # reference needed information_schema / zero-row probe queries.
-            self._schema_cache = self.df().schema
-        return self._schema_cache
+        # Parquet footers make introspection free (SURVEY §1.3) — the
+        # reference needed information_schema / zero-row probe queries —
+        # and the scan memo makes it free after the first call per table
+        # version.
+        return self.df().schema
 
     # -- introspection (SURVEY §2-A op 20) ----------------------------------
 
@@ -137,12 +140,12 @@ class Table:
         # field list: default all, minus geometry when return_geom=False
         # (the reference's Oracle default excluded geometry entirely).
         if fields is None:
-            cols = list(self.fields)
+            cols = list(df.columns)
             if not return_geom and geom in cols:
                 cols.remove(geom)
         else:
             cols = list(fields)
-            unknown = [c for c in cols if c not in self.fields]
+            unknown = [c for c in cols if c not in df.columns]
             if unknown:
                 raise ValueError(f"fields not in table: {unknown}")
             if return_geom and geom and geom not in cols:
@@ -225,24 +228,23 @@ class Table:
         chunks committed.  Here one atomic Parquet job commit replaces that;
         ``chunk_size`` is accepted for API compatibility and ignored.
         """
+        target = self._schema
         if isinstance(rows, DataFrame):
-            df = rows
+            df, rows = rows, None
             write_fields = df.columns
         else:
             rows = list(rows)
             if not rows:
                 return
             write_fields = list(rows[0].keys())
-            df = self._rows_to_df(rows, write_fields)
 
         # field-exists validation (datum/postgis/table.py:256-262)
-        unknown = [f for f in write_fields if f not in self.fields]
+        unknown = [f for f in write_fields if f not in target.names]
         if unknown:
             raise ValueError(f"fields not in table: {unknown}")
-
-        geom = self.geom_field
-        if geom and geom in write_fields:
-            df = df.withColumn(geom, self._prepare_geom(F.col(geom), from_srid))
+        if rows is not None:
+            df = self._rows_to_df(rows, write_fields, target)
+        df = self._with_prepared_geom(df, rows, from_srid)
 
         # auto primary key injection (ref: SDE.GDB_UTIL.NEXT_ROWID,
         # datum/oracle_stgeom/table.py:437-443) — DENSE sequential ids
@@ -258,15 +260,17 @@ class Table:
             base = self._next_pk_base()
             df = self._with_dense_ids(df, pk, base)
 
-        # align to table schema: missing cols → NULL, cast to declared types
-        target = self._schema
-        aligned = [
+        self.db._write_table(self.name, self._align(df, target),
+                             mode="append")
+
+    @staticmethod
+    def _align(df: DataFrame, target) -> DataFrame:
+        """``df`` in the table schema ``target``: its column order and
+        declared types, missing columns as NULL."""
+        return df.select(*[
             (F.col(f.name) if f.name in df.columns else F.lit(None))
             .cast(f.dataType).alias(f.name)
-            for f in target.fields
-        ]
-        self.db._write_table(self.name, df.select(*aligned), mode="append")
-        self._schema_cache = None
+            for f in target.fields])
 
     @staticmethod
     def _with_dense_ids(df: DataFrame, pk: str, base: int) -> DataFrame:
@@ -303,14 +307,19 @@ class Table:
             current = None
         return int(current or 0) + 1
 
-    def _rows_to_df(self, rows: list[dict], write_fields: list[str]) -> DataFrame:
-        # Only None → NULL (fix §1.4#6: the reference coerced 0/False/'' all
-        # to empty string). NaN floats are preserved as NaN.  Python values
-        # are coerced to the declared column type the way the reference's
-        # _prepare_val did (datum/postgis/table.py:203-222): int→float for
-        # num(double) columns, ISO-8601 strings→date/timestamp, str() for
-        # text columns.
-        target_fields = {f.name: f for f in self._schema.fields}
+    def _rows_to_df(self, rows: list[dict], write_fields: list[str],
+                    target, keys=()) -> DataFrame:
+        """Row dicts → a local relation typed by the table schema
+        ``target``; with ``keys``, only the last row per key is kept.
+
+        Only None → NULL (fix §1.4#6: the reference coerced 0/False/''
+        all to empty string). NaN floats are preserved as NaN.  Python
+        values are coerced to the declared column type the way the
+        reference's _prepare_val did (datum/postgis/table.py:203-222):
+        int→float for num(double) columns, ISO-8601 strings→date/timestamp,
+        str() for text columns.
+        """
+        target_fields = {f.name: f for f in target.fields}
         from pyspark.sql import types as T
         fields = [target_fields.get(f, T.StructField(f, T.StringType(), True))
                   for f in write_fields]
@@ -343,16 +352,42 @@ class Table:
 
         cleaned = [tuple(coerce(r.get(f.name), f.dataType) for f in fields)
                    for r in rows]
-        return self.db.spark.createDataFrame(cleaned, schema)
+        if keys:
+            # last occurrence wins, as MERGE matches each target row at
+            # most once; NaN keys group together, as in Spark's grouping
+            at = [write_fields.index(k) for k in keys]
+            last = {}
+            for row in cleaned:
+                last[tuple(_NAN if v != v else v
+                           for v in (row[i] for i in at))] = row
+            cleaned = list(last.values())
+        return util.local_frame(self.db.spark, cleaned, schema)
 
-    def _prepare_geom(self, col: Column, from_srid: int | None) -> Column:
+    def _with_prepared_geom(self, df: DataFrame, rows: list[dict] | None,
+                            from_srid: int | None) -> DataFrame:
+        """``df`` with :meth:`_prepare_geom` applied to the geometry column,
+        if it carries one.  For a list batch (``rows``) the values are on
+        the driver, so the curve step (a pandas-UDF stage) joins only when
+        some value is a curve."""
+        geom = self.geom_field
+        if not geom or geom not in df.columns:
+            return df
+        curves = rows is None or any(
+            v is not None and is_curve_wkt(str(v))
+            for v in (r.get(geom) for r in rows))
+        return df.withColumn(
+            geom, self._prepare_geom(F.col(geom), from_srid, curves))
+
+    def _prepare_geom(self, col: Column, from_srid: int | None,
+                      curves: bool = True) -> Column:
         """Geometry write normalization as column expressions
         (reference ``_prepare_geom``: ``datum/postgis/table.py:179-201``,
         ``datum/oracle_stgeom/table.py:317-340``)."""
         out = force_2d(scrub_m_values(col))
         # curve conversion before MULTI promotion, matching the reference's
         # ST_CurveToLine-inside-ST_Multi nesting (postgis/table.py:189-191)
-        out = curve_to_line(out)
+        if curves:
+            out = curve_to_line(out)
         gtype = self.geom_type
         if gtype:
             out = multi_cast(out, gtype)
@@ -388,31 +423,26 @@ class Table:
             raise ValueError(
                 f"table {self.name!r} is not partitioned; "
                 "overwrite_partitions needs a partition_by table")
+        target = self._schema
         df = rows if isinstance(rows, DataFrame) else self._rows_to_df(
-            list(rows), list(rows[0].keys()) if rows else self.fields)
+            list(rows), list(rows[0].keys()) if rows else target.names,
+            target)
         for c in part_cols:
             if c not in df.columns:
                 raise ValueError(f"rows missing partition field: {c!r}")
         pk = self.pk_field
         if pk and self._props.get("pk_auto") and pk not in df.columns:
             df = self._with_dense_ids(df, pk, self._next_pk_base())
-        aligned = [
-            (F.col(f.name) if f.name in df.columns else F.lit(None))
-            .cast(f.dataType).alias(f.name)
-            for f in self._schema.fields
-        ]
         spark = self.db.spark
         key = "spark.sql.sources.partitionOverwriteMode"
         prev = spark.conf.get(key, "static")
         spark.conf.set(key, "dynamic")
         try:
-            (df.select(*aligned).write.mode("overwrite")
+            (self._align(df, target).write.mode("overwrite")
              .partitionBy(*part_cols)
              .parquet(self.db._table_path(self.name)))
         finally:
             spark.conf.set(key, prev)
-        self.db._registered.discard(self.name)
-        self._schema_cache = None
 
     def compact(self, target_file_mb: int = 128) -> dict:
         """Coalesce small files: rewrite the table with file count sized
@@ -495,7 +525,6 @@ class Table:
                   .sortWithinPartitions(*cols))
         # stage to a temp dir via collect-free rewrite: write new, swap
         self.db._rewrite_table(self.name, df)
-        self._schema_cache = None
 
     def upsert(self, rows, keys: list[str] | str) -> None:
         """MERGE/upsert: rows whose ``keys`` match an existing row replace
@@ -509,45 +538,47 @@ class Table:
         (size known and small); DataFrame batches of unknown size go
         through Catalyst/AQE's autoBroadcastJoinThreshold so a large
         upsert cannot OOM the driver.  Duplicate keys WITHIN the batch are
-        collapsed first (last occurrence wins for list input, matching
-        MERGE's \"each target row matched at most once\" contract).
+        collapsed first, last occurrence winning (MERGE's \"each target
+        row matched at most once\" contract): on the driver for a list,
+        by a window over the partition order for a DataFrame.  Geometry
+        is normalized as :meth:`write` normalizes it.
         """
         keys = [keys] if isinstance(keys, str) else list(keys)
+        cur = self.df()
         for k in keys:
-            if k not in self.fields:
+            if k not in cur.columns:
                 raise ValueError(f"field not in table: {k}")
-        small_batch = False
         if isinstance(rows, DataFrame):
-            new = rows
+            new, rows = rows, None
+            batch_fields = new.columns
         else:
             rows = list(rows)
             if not rows:
                 return
-            new = self._rows_to_df(rows, list(rows[0].keys()))
-            small_batch = len(rows) <= 1_000_000
+            batch_fields = list(rows[0].keys())
         for k in keys:
-            if k not in new.columns:
+            if k not in batch_fields:
                 raise ValueError(f"upsert rows missing key field: {k}")
-        # dedupe the incoming batch on the keys: last-wins in input order
-        # (parallelize preserves list order → max __seq is the last row)
-        from pyspark.sql import Window
+        if rows is not None:
+            # the list is on the driver: dedupe it there, last row wins
+            new = self._rows_to_df(rows, batch_fields, cur.schema, keys)
+        else:
+            # a DataFrame's order is not on the driver: last-wins in its
+            # partition order (max __seq is the last row)
+            from pyspark.sql import Window
 
-        seq = new.withColumn("__seq", F.monotonically_increasing_id())
-        w = Window.partitionBy(*keys).orderBy(F.col("__seq").desc())
-        new = (seq.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") == 1).drop("__seq", "__rn"))
-        cur = self.df()
-        # align incoming columns to the table schema (missing → null)
-        aligned = new.select(*[
-            (F.col(c) if c in new.columns else F.lit(None)).cast(
-                dict(cur.dtypes)[c]).alias(c)
-            for c in cur.columns])
-        key_slice = aligned.select(*keys).distinct()
-        if small_batch:
+            seq = new.withColumn("__seq", F.monotonically_increasing_id())
+            w = Window.partitionBy(*keys).orderBy(F.col("__seq").desc())
+            new = (seq.withColumn("__rn", F.row_number().over(w))
+                      .filter(F.col("__rn") == 1).drop("__seq", "__rn"))
+        new = self._with_prepared_geom(new, rows, None)
+        aligned = self._align(new, cur.schema)
+        # keys are unique after the dedupe: the slice needs no distinct
+        key_slice = aligned.select(*keys)
+        if rows is not None and len(rows) <= 1_000_000:
             key_slice = F.broadcast(key_slice)
         kept = cur.join(key_slice, keys, "left_anti")
         self.db._rewrite_table(self.name, kept.unionByName(aligned))
-        self._schema_cache = None
 
     # -- index ops (SURVEY §2-A op 18) --------------------------------------------
 

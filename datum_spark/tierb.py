@@ -21,26 +21,13 @@ from pyspark.sql import functions as F
 from .sources.registry import read_parquet_normalized
 
 
-# (path → (session, DataFrame)) memo for the FIXTURE loader: the driver
-# and bench run ~190 queries against the same handful of immutable
-# parquet fixtures, and every load() otherwise re-reads the footer (the
-# nanos probe) and re-lists files — a fixed ~0.1-0.3 s plan-build tax
-# per query that at 190 queries is ~half the local suite (BASELINE.md
-# §5).  The cached object is an UNMATERIALIZED DataFrame (a resolved
-# scan plan, no rows pinned); safe because the testdata fixtures are
-# read-only — do not reuse this for mutable tables (Table.read goes
-# through sources.registry directly, uncached).
-_LOAD_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    hit = _LOAD_MEMO.get(path)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = read_parquet_normalized(spark, path)
-    _LOAD_MEMO[path] = (spark, df)
-    return df
+    """A fixture table's scan.  The driver and bench run ~190 queries
+    against the same handful of parquet fixtures: the scan memo in
+    ``sources.registry`` hands every one the same resolved plan, where a
+    fresh read would re-probe the footers and re-list the files — a
+    fixed ~0.1-0.3 s plan-build tax per query (BASELINE.md §5)."""
+    return read_parquet_normalized(spark, f"{sf_dir}/{name}.parquet")
 
 
 # registry: name -> (spark_builder, oracle_sql or None)

@@ -107,6 +107,41 @@ def struct_type_for(cols: list[dict]) -> T.StructType:
     return T.StructType(fields)
 
 
+# Spark types whose Python values go to Arrow through their internal
+# form (days / microseconds since the epoch), the one PySpark's row path
+# computes: a naive datetime means process-local time there, and Arrow
+# alone would read it as UTC.
+_INTERNAL_ARROW = {T.DateType: "int32", T.TimestampType: "int64",
+                   T.TimestampNTZType: "int64"}
+
+
+def local_frame(spark, rows: list[tuple], schema: T.StructType):
+    """Driver-side tuples → DataFrame through an Arrow local relation.
+
+    The plan is a ``LocalTableScan``: unlike ``createDataFrame(list,
+    schema)`` (a Python RDD, ``Scan ExistingRDD``), scanning it starts no
+    Python worker, and collecting it starts no job.  Values must already
+    have the column types (no coercion here).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, schema.fields,
+                                          arrow_schema):
+        base = _INTERNAL_ARROW.get(type(field.dataType))
+        if base is None:
+            arrays.append(pa.array(values, arrow_field.type))
+            continue
+        internal = [None if v is None else field.dataType.toInternal(v)
+                    for v in values]
+        arrays.append(pa.array(internal, base).cast(arrow_field.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 # ---------------------------------------------------------------------------
 # Parallelism
 

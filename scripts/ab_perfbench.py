@@ -5,7 +5,10 @@ cannot see per-process costs such as ``setup_s``.  This script runs
 ``perfbench/run.py`` as a subprocess from each checkout's root, one seed
 at a time, alternating which side goes first per seed so box drift hits
 both sides alike.  It prints one row per pair, then for each figure each
-side's median and quartiles and how many pairs the change won.
+side's median and quartiles and how many pairs the change won.  The
+per-op-kind p50s of each run (``detail.op_p50_s``: read, write, upsert
+... on ``datum_crud``) get the same rows and summary, so a pair table
+shows which operation moved.
 
 Usage: python scripts/ab_perfbench.py <parent_root> <change_root> \\
            --workload datum_crud --seeds 101 102 103 [--seconds 12] \\
@@ -46,6 +49,7 @@ def run_once(root: str, workload: str, seed: int, seconds: float):
     detail = json.loads(lines[-2])["perfbench"]
     result = json.loads(lines[-1])
     out = {label: get(result, detail) for label, _, get in FIGURES}
+    out["op_p50_s"] = detail["detail"]["op_p50_s"]
     out["correct"] = result["correct"]
     out["failed"] = result["failed"]
     return out
@@ -53,6 +57,23 @@ def run_once(root: str, workload: str, seed: int, seconds: float):
 
 def wins(better: str, parent: float, change: float) -> bool:
     return change < parent if better == "lower" else change > parent
+
+
+def summarize(pairs, label: str, better: str, get) -> dict:
+    """Each side's median and quartiles of one figure, and change wins;
+    prints one line."""
+    row = {"better": better, "change_wins": sum(
+        wins(better, get(x["parent"]), get(x["change"])) for x in pairs)}
+    for side in ("parent", "change"):
+        q1, med, q3 = statistics.quantiles(
+            [get(x[side]) for x in pairs], n=4)
+        row[side] = {"median": med, "q1": q1, "q3": q3}
+    print(f"{label:16s} parent {row['parent']['median']:.3f} "
+          f"[{row['parent']['q1']:.3f}, {row['parent']['q3']:.3f}]  "
+          f"change {row['change']['median']:.3f} "
+          f"[{row['change']['q1']:.3f}, {row['change']['q3']:.3f}]  "
+          f"wins {row['change_wins']}/{len(pairs)} ({better} is better)")
+    return row
 
 
 def main() -> int:
@@ -83,6 +104,10 @@ def main() -> int:
             f"{p[label]:.3f}/{c[label]:.3f}" for label, _, _ in FIGURES)
             + f" {p['correct']}/{c['correct']} {p['failed']}/{c['failed']}",
             flush=True)
+        print("  op p50 s " + " ".join(
+            f"{kind}={p['op_p50_s'][kind]:.3f}/{c['op_p50_s'][kind]:.3f}"
+            for kind in sorted(p["op_p50_s"].keys() & c["op_p50_s"].keys())),
+            flush=True)
 
     if len(pairs) < 2:
         print("fewer than two complete pairs: no summary")
@@ -90,19 +115,14 @@ def main() -> int:
     print(f"\n{len(pairs)} pairs; median [q1, q3] per side, change wins")
     summary = {}
     for label, better, _ in FIGURES:
-        row = {"better": better, "change_wins": sum(
-            wins(better, x["parent"][label], x["change"][label])
-            for x in pairs)}
-        for side in ("parent", "change"):
-            vals = [x[side][label] for x in pairs]
-            q1, med, q3 = statistics.quantiles(vals, n=4)
-            row[side] = {"median": med, "q1": q1, "q3": q3}
-        summary[label] = row
-        print(f"{label:16s} parent {row['parent']['median']:.3f} "
-              f"[{row['parent']['q1']:.3f}, {row['parent']['q3']:.3f}]  "
-              f"change {row['change']['median']:.3f} "
-              f"[{row['change']['q1']:.3f}, {row['change']['q3']:.3f}]  "
-              f"wins {row['change_wins']}/{len(pairs)} ({better} is better)")
+        summary[label] = summarize(pairs, label, better,
+                                   lambda run, key=label: run[key])
+    print("\nper-op-kind p50 (s)")
+    kinds = set.intersection(*(set(x[side]["op_p50_s"]) for x in pairs
+                               for side in ("parent", "change")))
+    for kind in sorted(kinds):
+        summary[f"op_p50_s.{kind}"] = summarize(
+            pairs, kind, "lower", lambda run, key=kind: run["op_p50_s"][key])
     if args.json:
         with open(args.json, "w") as fh:
             json.dump({"workload": args.workload, "pairs": pairs,

@@ -417,6 +417,94 @@ def test_upsert_validates_keys(tmp_db):
         tmp_db["u2"].upsert([{"s": "x"}], keys="id")
 
 
+def test_upsert_normalizes_geometry_like_write(tmp_db):
+    """Upserted geometry goes through the same Force2D / MULTI cast /
+    typed-EMPTY normalization as written geometry."""
+    tmp_db.create_table("gu", [{"name": "shape", "type": "geom"}])
+    t = tmp_db["gu"]
+    t._store_props({**t._props, "geom_type": "MULTIPOINT"})
+    t.write([{"shape": "POINT (1 2)"}, {"shape": None}])
+    assert [r["shape"] for r in t.read(sort="id")] == [
+        "MULTIPOINT ((1 2))", "MULTIPOINT EMPTY"]
+    t.upsert([{"id": 1, "shape": "POINT Z (3 4 NaN)"},
+              {"id": 2, "shape": None}], keys="id")
+    assert [r["shape"] for r in t.read(sort="id")] == [
+        "MULTIPOINT ((3 4))", "MULTIPOINT EMPTY"]
+
+
+def test_execute_sees_write_through_second_handle(spark, tmp_path):
+    db = datum_spark.connect(str(tmp_path), spark=spark)
+    db.create_table("t", [{"name": "a", "type": "num"}])
+    db["t"].write([{"a": 1.0}])
+    assert db.execute("SELECT COUNT(*) AS n FROM t") == [{"n": 1}]
+    db2 = datum_spark.connect(str(tmp_path), spark=spark)
+    db2["t"].write([{"a": 2.0}, {"a": 3.0}])
+    assert db.execute("SELECT COUNT(*) AS n FROM t") == [{"n": 3}]
+    assert db["t"].count == 3
+
+
+def test_read_and_execute_see_file_from_another_writer(tmp_db, tmp_path):
+    """A parquet file another process drops into the table directory
+    (pyarrow stands in for it) shows up on the next read and execute."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp_db.create_table("t", [{"name": "a", "type": "num"}])
+    tmp_db["t"].write([{"a": 1.0}])
+    assert tmp_db.execute("SELECT SUM(a) AS s FROM t") == [{"s": 1.0}]
+    assert len(tmp_db["t"].read()) == 1
+    pq.write_table(pa.table({"id": pa.array([7], pa.int64()),
+                             "a": pa.array([5.0])}),
+                   str(tmp_path / "t.parquet" / "part-external.parquet"))
+    assert sorted(r["a"] for r in tmp_db["t"].read()) == [1.0, 5.0]
+    assert tmp_db.execute("SELECT SUM(a) AS s FROM t") == [{"s": 6.0}]
+
+
+def test_written_rows_keep_types_in_local_time(tmp_db, monkeypatch):
+    """Naive datetimes mean process-local time, ISO strings parse, NaN
+    and None stay distinct and True is 1.0 in a num column."""
+    import datetime
+    import math
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        tmp_db.create_table("ty", [{"name": "ts", "type": "date"},
+                                   {"name": "num", "type": "num"}])
+        stamp = datetime.datetime(2020, 1, 2, 3, 4, 5)
+        tmp_db["ty"].write([{"ts": stamp, "num": float("nan")},
+                            {"ts": "2020-01-02T03:04:05", "num": None},
+                            {"ts": None, "num": True}])
+        got = tmp_db["ty"].read(sort="id")
+        assert [r["ts"] for r in got] == [stamp, stamp, None]
+        assert math.isnan(got[0]["num"])
+        assert [r["num"] for r in got[1:]] == [None, 1.0]
+        assert tmp_db.execute(
+            "SELECT CAST(ts AS STRING) AS ts FROM ty ORDER BY id") == [
+            {"ts": "2020-01-02 08:04:05"}, {"ts": "2020-01-02 08:04:05"},
+            {"ts": None}]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_warm_read_plans_without_a_job(tmp_db, spark):
+    """A second query on an unchanged table reuses the memoized scan: its
+    planning starts no Spark job (a fresh read runs a footer-schema job)."""
+    tmp_db.create_table("w", [{"name": "a", "type": "num"}])
+    tmp_db["w"].write([{"a": 1.0}, {"a": 2.0}])
+    tmp_db["w"].query(where="a > 1")
+    sc = spark.sparkContext
+    sc.setJobGroup("test-warm-read", "warm read plan")
+    try:
+        df = tmp_db["w"].query(where="a > 1", sort="a")
+        assert sc.statusTracker().getJobIdsForGroup("test-warm-read") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["a"] for r in df.collect()] == [2.0]
+
+
 def test_overwrite_partitions_touches_only_changed(tmp_db):
     """Dynamic partition overwrite: backfilling one partition's rows must
     leave the other partitions' parquet files physically untouched."""
