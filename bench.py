@@ -112,7 +112,8 @@ def main() -> int:
         load_pre = -1.0
 
     import __spark_entry__ as entry_mod
-    from datum_spark.session import default_parallelism, get_session
+    from datum_spark.session import (codegen_compiles, default_parallelism,
+                                     get_session)
 
     spark = get_session(app_name="datum_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -122,6 +123,9 @@ def main() -> int:
     qs = entry_mod.queries()
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}    # [min, max] of the timed reps
+    # classes compiled during the timed reps: nonzero flags an entry
+    # whose plans escape the codegen cache
+    compiles: dict[str, int] = {}
     for name, fn in qs.items():
         # per-entry ISOLATION (r11): drop the operator cache ring and
         # any catalog-cached frames left by the PREVIOUS entry before
@@ -145,12 +149,14 @@ def main() -> int:
             print(f"# {name} ERROR {str(exc)[:120]}", file=sys.stderr)
             continue
         samples = []
+        c0 = codegen_compiles(spark)
         for _ in range(reps):
             t0 = time.perf_counter()
             fn(spark, sf_dir).collect()
             samples.append(time.perf_counter() - t0)
         timings[name] = round(statistics.median(samples), 4)
         spread[name] = [round(min(samples), 4), round(max(samples), 4)]
+        compiles[name] = codegen_compiles(spark) - c0
 
     # composed-pipeline regression gate (one run; separate metric so the
     # per-query suite total stays comparable across rounds)
@@ -198,6 +204,7 @@ def main() -> int:
             "unit": "sec",
             "queries": timings,
             "spread": spread,
+            "codegen_compiles": compiles,
             "sf": sf_val,
             "n_queries": len(timings),
             "reps": reps,

@@ -93,19 +93,21 @@ def _checksum(directed: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["s"] or 0)
 
 
-# Directed-edge count under which the remaining star-contraction rounds
-# run as ONE collect + driver union-find instead of O(log n) rounds of
-# 3 shuffles + 2 jobs each.  This is a size-gated PHYSICAL choice, not a
-# local-mode tune: on any cluster, finishing a <=100k-edge forest on the
-# driver strictly dominates scheduling more distributed rounds, and the
-# gate reads the edge count the convergence checksum already computes
-# every round (no extra job, no extra pass at scale).
+# Edge count under which components are found by ONE bounded collect +
+# driver union-find instead of O(log n) star-contraction rounds of 3
+# shuffles + 2 jobs each.  This is a size-gated PHYSICAL choice, not a
+# local-mode tune: on any cluster, finishing a <=100k-edge graph on the
+# driver strictly dominates scheduling distributed rounds.  The gate is
+# read twice: before any round, on a ``limit(gate + 1)`` collect of the
+# raw edge list (a small pair list never runs a round), and after each
+# round, on the edge count the convergence checksum already computes.
 _DRIVER_CC_EDGES = 100_000
 
 
 def _driver_components(rows, include_roots: bool = False) -> list:
-    """Union-find (min-id roots) over collected directed edges; returns
-    the exact row set the converged distributed star would hold: one
+    """Union-find (min-id roots) over collected edges (raw pairs or a
+    round's directed forest; no self-loops or nulls); returns the exact
+    row set the converged distributed star would hold: one
     ``(node, component_min)`` row per non-root node (plus one
     self-mapped row per root with ``include_roots``)."""
     parent: dict = {}
@@ -142,23 +144,41 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     to itself (the :func:`dup_clusters` contract) — on the driver
     finish that costs nothing, vs. a union + distinct round after.
 
-    One distributed star-contraction round always runs (it is also the
-    only full pass over the raw pair list); if the surviving directed
-    edge set is small (its count rides the existing convergence
-    checksum), the remaining O(log n) rounds collapse into a driver
-    union-find over the SAME edge set — row-for-row the converged
+    The gate decides before anything runs: the edge list without
+    self-loops and null endpoints (``a != b`` drops both, as
+    :func:`_symmetrize` does) is persisted and collected under a
+    ``limit(_DRIVER_CC_EDGES + 1)``.  If it fits, a driver union-find
+    over those raw edges gives the answer — row-for-row the converged
     star's output, since both compute (node → component minimum) over
-    the round-1 forest, which star contraction proves connectivity-
-    equivalent to the input.
+    the same connectivity — and no distributed round runs.  Otherwise
+    the star rounds read the persisted list (the upstream pair plan
+    runs once: the limit's jobs already materialised its shuffles), and
+    once a round's surviving directed edge set fits under the gate (its
+    count rides the convergence checksum) the remaining rounds collapse
+    into the same driver union-find over that round's forest.
     """
     spark = edges.sparkSession
-    cur = _small_star(_large_star(_symmetrize(edges))).localCheckpoint()
+    a, b = edges.columns[0], edges.columns[1]
+    # the id type both endpoints widen to (as _symmetrize's array does)
+    t = edges.select(F.array(a, b).alias("e")).schema["e"].dataType
+    schema = T.StructType([T.StructField("node", t.elementType),
+                           T.StructField("component", t.elementType)])
+    raw = (edges.select(F.col(a).cast(t.elementType).alias("u"),
+                        F.col(b).cast(t.elementType).alias("v"))
+           .filter(F.col("u") != F.col("v"))
+           .persist())
+    try:
+        head = raw.limit(_DRIVER_CC_EDGES + 1).collect()
+        if len(head) <= _DRIVER_CC_EDGES:
+            return local_frame(spark, _driver_components(head, include_roots),
+                               schema)
+        cur = _small_star(_large_star(_symmetrize(raw))).localCheckpoint()
+    finally:
+        raw.unpersist()
     prev_sum = _checksum(cur)
     if prev_sum[0] <= _DRIVER_CC_EDGES:
-        out = _driver_components(cur.collect(), include_roots)
-        return local_frame(spark, out, T.StructType([
-            T.StructField("node", cur.schema["child"].dataType),
-            T.StructField("component", cur.schema["parent"].dataType)]))
+        return local_frame(spark, _driver_components(cur.collect(),
+                                                     include_roots), schema)
     for _ in range(max_iter):
         nxt = _small_star(_large_star(_symmetrize(cur))).localCheckpoint()
         new_sum = _checksum(nxt)

@@ -18,17 +18,16 @@ stage ever funnels the data through one task, which is what the naive
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pack_documents(df: DataFrame, order_col: str, token_col: str,
-                   budget: int, num_partitions: int | None = None,
-                   out_col: str = "pack_id") -> DataFrame:
-    """Assign each row a ``pack_id`` so consecutive rows (by ``order_col``)
-    share a pack until ``budget`` tokens are consumed."""
-    if budget <= 0:
-        raise ValueError("budget must be positive")
+def _prefix_sum(df: DataFrame, order_col: str, token_col: str,
+                num_partitions: int | None) -> tuple[DataFrame, Column, int]:
+    """The distributed token prefix sum: ``df`` range-partitioned on
+    ``order_col`` (with a ``__pid`` column), the tokens-before-this-row
+    column over it, and the token total — all from ONE driver collect of
+    the per-partition totals."""
     from ..session import default_parallelism
 
     n = num_partitions or default_parallelism()
@@ -60,9 +59,25 @@ def pack_documents(df: DataFrame, order_col: str, token_col: str,
     w = (Window.partitionBy("__pid").orderBy(order_col)
          .rowsBetween(Window.unboundedPreceding, -1))
     before = F.coalesce(F.sum(token_col).over(w), F.lit(0)) + off_col
+    return d, before, acc
+
+
+def _assign(d: DataFrame, before: Column, budget: int,
+            out_col: str) -> DataFrame:
     return (d.withColumn(out_col,
                          F.floor(before / F.lit(budget)).cast("long"))
              .drop("__pid"))
+
+
+def pack_documents(df: DataFrame, order_col: str, token_col: str,
+                   budget: int, num_partitions: int | None = None,
+                   out_col: str = "pack_id") -> DataFrame:
+    """Assign each row a ``pack_id`` so consecutive rows (by ``order_col``)
+    share a pack until ``budget`` tokens are consumed."""
+    if budget <= 0:
+        raise ValueError("budget must be positive")
+    d, before, _ = _prefix_sum(df, order_col, token_col, num_partitions)
+    return _assign(d, before, budget, out_col)
 
 
 def pack_summary(packed: DataFrame, token_col: str,
@@ -87,9 +102,9 @@ def write_training_shards(df: DataFrame, path: str, order_col: str,
     sharding) and shard token totals differ by at most one document, the
     same greedy bound as :func:`pack_documents`.  Deterministic: a
     function of the data alone, so a re-run (or another engine) derives
-    the identical layout.  Cost beyond the write itself: one scalar
-    aggregate for the total plus the prefix sum's per-partition counts —
-    no single-task stage anywhere.
+    the identical layout.  Cost beyond the write itself: the prefix
+    sum's one collect of per-partition totals, whose sum is the total
+    the budget derives from — no single-task stage anywhere.
 
     Returns ``(sharded_df, metrics)``: the DataFrame (with the ``shard``
     column) for :func:`pack_summary`-style audits, and a metrics dict
@@ -102,10 +117,9 @@ def write_training_shards(df: DataFrame, path: str, order_col: str,
     from ..sources.registry import write_table
     from .metrics import observe
 
-    total = df.agg(F.sum(token_col)).collect()[0][0] or 0
+    d, before, total = _prefix_sum(df, order_col, token_col, None)
     budget = max(1, -(-int(total) // n_shards))  # ceil
-    sharded = pack_documents(df, order_col, token_col, budget,
-                             out_col="shard")
+    sharded = _assign(d, before, budget, "shard")
     observed, obs = observe(sharded, rows=F.count(F.lit(1)),
                             tokens=F.sum(token_col))
     write_table(observed, path, fmt=fmt, mode=mode,

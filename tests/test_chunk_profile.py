@@ -271,6 +271,31 @@ def test_write_training_shards_balanced_and_contiguous(spark, tmp_path):
     assert a == b
 
 
+def test_write_training_shards_empty_frame(spark, tmp_path):
+    from datum_spark.operators.packing import write_training_shards
+
+    df = spark.createDataFrame([], "doc_id long, nt long")
+    sharded, metrics = write_training_shards(df, str(tmp_path / "e"),
+                                             "doc_id", "nt", n_shards=4)
+    assert metrics["token_budget"] == 1
+    assert metrics["rows"] == 0 and metrics["tokens"] == 0
+    assert sharded.count() == 0
+
+
+def test_write_training_shards_null_token_counts(spark, tmp_path):
+    import math
+
+    from datum_spark.operators.packing import write_training_shards
+
+    rows = [(i, None if i % 5 == 0 else 3 + i % 4) for i in range(60)]
+    total = sum(nt for _, nt in rows if nt is not None)
+    df = spark.createDataFrame(rows, "doc_id long, nt long")
+    _, metrics = write_training_shards(df, str(tmp_path / "n"), "doc_id",
+                                       "nt", n_shards=4)
+    assert metrics["token_budget"] == math.ceil(total / 4)
+    assert metrics["rows"] == 60 and metrics["tokens"] == total
+
+
 def test_write_training_shards_rejects_bad_n(spark, tmp_path):
     from datum_spark.operators.packing import write_training_shards
 

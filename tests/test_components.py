@@ -101,3 +101,35 @@ def test_dup_clusters_distributed_include_roots(spark, monkeypatch):
     assert len(slow) == len(set(slow))
     roots = {c for _, c in slow}
     assert all((c, c) in set(slow) for c in roots)
+
+
+def test_cc_gate_self_loops_nulls_duplicates(spark, monkeypatch):
+    """Self-loops, null endpoints, duplicate and reversed edges: the
+    driver pre-gate and the forced distributed path give identical rows
+    for both entry points, and both equal union-find over the edges
+    with two distinct non-null endpoints."""
+    from datum_spark.operators import components as comp_mod
+
+    rng = random.Random(23)
+    nodes = list(range(60))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(80)]
+    edges += [(v, u) for u, v in edges[:20]] + edges[:15]
+    edges += [(500, 500), (501, 501), (3, 3)]
+    edges += [(None, 3), (7, None), (None, None), (600, None)]
+    clean = [(u, v) for u, v in edges
+             if u is not None and v is not None and u != v]
+    uf = _union_find_components(clean)
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+
+    def run():
+        cc = sorted((r["node"], r["component"])
+                    for r in connected_components(df).collect())
+        dc = sorted((r["node"], r["component"])
+                    for r in dup_clusters(df).collect())
+        return cc, dc
+
+    fast = run()
+    monkeypatch.setattr(comp_mod, "_DRIVER_CC_EDGES", -1)
+    assert run() == fast
+    assert fast[0] == sorted((n, c) for n, c in uf.items() if n != c)
+    assert fast[1] == sorted(uf.items())

@@ -60,6 +60,23 @@ def test_q12_stays_in_codegen(spark):
         plan[:2000]
 
 
+def test_warm_session_compiles_each_class_once(spark):
+    """150 distinct generated classes (codegen inlines each literal),
+    collected twice: the second round compiles nothing.  At Spark's
+    default cache size of 100 the LRU evicts every class before its
+    reuse and all 150 compile again."""
+    from datum_spark.session import codegen_compiles
+
+    def collect_all():
+        for i in range(1000, 1150):
+            spark.range(8).selectExpr(f"id * {i} + {i} AS x").collect()
+
+    collect_all()
+    before = codegen_compiles(spark)
+    collect_all()
+    assert codegen_compiles(spark) - before == 0
+
+
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """Co-bucketed tables join without a shuffle: the sort-merge join reads
     matching buckets pairwise, so the final plan has NO Exchange operator
