@@ -47,6 +47,9 @@ class Database:
             raise ValueError(f"invalid url scheme: {self.scheme!r}")
         self.spark = spark or get_session()
         self._memory_tables: dict[str, DataFrame] = {}
+        # table properties of non-file schemes (file tables keep theirs
+        # in _meta/<name>.json)
+        self._memory_meta: dict[str, dict] = {}
         self._views: set[str] = set()
         self._mviews: set[str] = set()
         # table name → the DataFrame its temp view was last bound to
@@ -162,13 +165,18 @@ class Database:
             (df.write.format("jdbc").option("url", self.url)
                .option("dbtable", name).mode(mode).save())
             return
+        self._write_parquet(name, df, mode, self._table_path(name))
+
+    def _write_parquet(self, name: str, df: DataFrame, mode: str,
+                       path: str) -> None:
+        """Write ``df`` as table ``name``'s parquet layout at ``path``."""
         writer = df.write.mode(mode)
         part_cols = self._load_meta(name).get("partition_by")
         if part_cols:
             # hive layout: partition values become directories, and filters
             # on them prune whole directories (PartitionFilters) at scale
             writer = writer.partitionBy(*part_cols)
-        writer.parquet(self._table_path(name))
+        writer.parquet(path)
 
     def _rewrite_table(self, name: str, df: DataFrame) -> None:
         """Replace a table's files with ``df``'s data via write-then-swap.
@@ -193,11 +201,7 @@ class Database:
         for stale in (tmp, old):
             if os.path.exists(stale):
                 shutil.rmtree(stale)
-        writer = df.write.mode("overwrite")
-        part_cols = self._load_meta(name).get("partition_by")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(tmp)
+        self._write_parquet(name, df, "overwrite", tmp)
         os.rename(path, old)
         try:
             os.rename(tmp, path)
@@ -308,7 +312,6 @@ class Database:
         if meta and self.scheme == "file":
             self._store_meta(name, {**self._load_meta(name), **meta})
         elif meta:
-            self._memory_meta = getattr(self, "_memory_meta", {})
             self._memory_meta[name] = meta
         empty = self.spark.createDataFrame([], schema)
         self._write_table(name, empty, mode="overwrite")
@@ -397,14 +400,13 @@ class Database:
                 self._store_meta("_views", views)
 
     def _restore_views(self) -> None:
-        """Re-register persisted view definitions (file scheme only)."""
+        """Re-register persisted view definitions (file scheme only).
+        Its caller, :meth:`register_all`, has just bound every table."""
         if self.scheme != "file":
             return
         for name, stmt in self._load_meta("_views").items():
             if name in self._views:
                 continue
-            for table in self.tables:
-                self._register(table)
             self.spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} "
                            f"AS {self._translate(stmt)}")
             self._views.add(name)

@@ -122,9 +122,8 @@ def x38(spark, sf):
     """Deterministic leak-proof train/test split labeling (per-source
     counts): membership is a pure function of doc_id, stable across
     partitioning and cluster size.  Promoted to oracle-checked in r6 by
-    keying on the portable md5 bucket (salt 'holdout', 90/10) — the
-    xxhash64 variant (:func:`with_split_label`) stays in the library for
-    speed-critical pipelines and keeps its determinism unit tests."""
+    keying on the portable md5 bucket (salt 'holdout', 90/10), the
+    library's one split hash family."""
     from ..operators import with_md5_split_label
 
     docs = load(spark, sf, "documents")
@@ -249,14 +248,14 @@ ORDER BY id_a, id_b""")
 def x05(spark, sf):
     """SimHash hamming-≤6 near-dup pairs via 16-bit pigeonhole banding,
     vectorized signature stage (hashlib-C md5 token hashes + one NumPy bit
-    broadcast per doc — ~20× the 64-when-per-token JVM expression).  The
-    md5 hash family is portable, so the DuckDB oracle re-derives the exact
-    signatures (token hash, seed xor, bit votes, sign packing) and the
-    banding restriction (pairs must agree on >=1 of the 4 chunks) in pure
-    SQL — the x62 discipline applied to SimHash."""
+    broadcast per doc).  The md5 hash family is portable, so the DuckDB
+    oracle re-derives the exact signatures (token hash, seed xor, bit
+    votes, sign packing) and the banding restriction (pairs must agree
+    on >=1 of the 4 chunks) in pure SQL — the x62 discipline applied to
+    SimHash."""
     docs = load_docs(spark, sf).filter(F.col("doc_id") < 200)
     return (dedup_mod.simhash_near_dups(docs, "doc_id", "text",
-                                        max_hamming=6, fast=True)
+                                        max_hamming=6)
             .orderBy("id_a", "id_b"))
 
 

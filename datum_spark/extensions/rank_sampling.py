@@ -333,14 +333,15 @@ GROUP BY c.doc_id ORDER BY c.doc_id""")
 def x49(spark, sf):
     """Benchmark decontamination: corpus docs (doc_id % 50 != 0) that share
     a word 3-gram with the 'benchmark' subset (doc_id % 50 == 0), with the
-    count of distinct shared grams.  Benchmark grams broadcast; the corpus
-    side only shuffles for the final per-doc count."""
-    from ..operators.contamination import ngram_overlap
-
+    count of distinct shared grams (``benchmark_contamination``'s
+    ``n_hits``).  Benchmark grams broadcast; the corpus side only
+    shuffles for the final per-doc count."""
     docs = load_docs(spark, sf)
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return (ngram_overlap(corpus, bench, "doc_id", "text", n=3)
+    return (dedup_mod.benchmark_contamination(corpus, bench, "doc_id",
+                                              "text", n=3)
+            .select("doc_id", F.col("n_hits").alias("n_shared"))
             .orderBy("doc_id"))
 
 
@@ -384,8 +385,6 @@ def x50(spark, sf):
     stage is an operator with its own oracle; this query proves they
     compose into one Catalyst plan (one job, no driver round-trips
     between stages)."""
-    from ..operators.contamination import decontaminate
-
     docs = load_docs(spark, sf)
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
@@ -393,7 +392,9 @@ def x50(spark, sf):
     scored = text_mod.with_repetition_ratio(scored, "text", "repetition")
     kept = scored.filter((F.col("n_tokens") >= 10)
                          & (F.col("repetition") < 0.5))
-    clean = decontaminate(kept, bench, "doc_id", "text", n=3)
+    flagged = dedup_mod.benchmark_contamination(kept, bench, "doc_id",
+                                                "text", n=3)
+    clean = kept.join(flagged.select("doc_id"), "doc_id", "left_anti")
     deduped = dedup_mod.exact_dedup(clean, ["text"], keep_by="doc_id")
     return (deduped.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -673,9 +674,7 @@ def x56(spark, sf):
     decided by the id hash (map-only CASE filter, no rand(), no shuffle,
     partitioning-independent).  Promoted to oracle-checked in r6 by
     keying on the portable md5 bucket (salt 'remix'); unlike x64 this
-    exercises the ``default_weight`` path for unlisted sources.  The
-    xxhash64 variant (:func:`mix_sources`) stays in the library with its
-    determinism/monotonicity unit tests."""
+    exercises the ``default_weight`` path for unlisted sources."""
     from ..operators.sampling import mix_sources_md5
 
     docs = load(spark, sf, "documents")

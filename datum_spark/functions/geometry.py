@@ -19,6 +19,8 @@ driver loop (the reference's per-row loops:
 
 from __future__ import annotations
 
+import re as _re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -181,73 +183,63 @@ def curve_to_line(col: Column) -> Column:
 # Reprojection — vectorized executor-side, replacing the reference's
 # single-threaded driver loop (datum/oracle_stgeom/table.py:307-313).
 
-_COORD_RE = r"(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)\s+(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
+_COORD_RE = _re.compile(
+    r"(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)\s+(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)")
+
+
+def _resolve_transform(from_srid: int, to_srid: int):
+    """The ``fn(x, y) -> (x', y')`` for an SRID pair: ``pyproj`` (any
+    pair) when installed, else the built-in projections of
+    :mod:`.projection` (LCC state-plane zones, TM/UTM, Web Mercator,
+    composed via 4326) — no external deps.  ``NotImplementedError``
+    when neither covers the pair."""
+    if _HAVE_PYPROJ:
+        return pyproj.Transformer.from_crs(
+            f"EPSG:{from_srid}", f"EPSG:{to_srid}", always_xy=True
+        ).transform
+    from .projection import builtin_transform
+
+    fn = builtin_transform(from_srid, to_srid)
+    if fn is None:
+        raise NotImplementedError(
+            f"no transform for EPSG:{from_srid} -> EPSG:{to_srid}: pyproj "
+            "is not installed and the pair is outside the built-in "
+            "projections (LCC state-plane zones, UTM, Web Mercator, "
+            "composed via 4326)")
+    return fn
+
+
+def _rewrite_coords(wkt: str, fn) -> str:
+    """Every coordinate pair of ``wkt`` through ``fn``, 8 decimals."""
+    def repl(m):
+        x, y = fn(float(m.group(1)), float(m.group(2)))
+        return f"{x:.8f} {y:.8f}"
+
+    return _COORD_RE.sub(repl, wkt)
 
 
 def reproject_wkt(col: Column, from_srid: int, to_srid: int) -> Column:
-    """Reproject every coordinate pair of a WKT column.
-
-    Implemented as an Arrow-batched pandas UDF wrapping a coordinate
-    transform (built once per executor, reused across batches).  Transform
-    resolution order:
-
-    1. ``pyproj`` (any SRID pair) when installed;
-    2. the built-in LCC math in :mod:`.projection` for datum's SRIDs of
-       record (2272 ↔ 4326) — no external deps;
-    3. otherwise ``NotImplementedError`` at plan-build time.
-    """
+    """Reproject every coordinate pair of a WKT column
+    (:func:`_resolve_transform` picks the transform).  An uncovered pair
+    raises ``NotImplementedError`` here, at plan-build time."""
     if from_srid == to_srid:
         return col
-    if _HAVE_PYPROJ:
-        def make_fn():
-            transformer = pyproj.Transformer.from_crs(
-                f"EPSG:{from_srid}", f"EPSG:{to_srid}", always_xy=True
-            )
-            return transformer.transform
-
-        return _reproject_with(col, make_fn)
-
-    from .projection import builtin_transform
-
-    if builtin_transform(from_srid, to_srid) is not None:
-        def make_builtin():
-            return builtin_transform(from_srid, to_srid)
-
-        return _reproject_with(col, make_builtin)
-    raise NotImplementedError(
-        f"no transform for EPSG:{from_srid} -> EPSG:{to_srid}: pyproj is "
-        "not installed and the pair is outside the built-in projections "
-        "(LCC state-plane zones, UTM, Web Mercator, composed via 4326); "
-        "use _reproject_with(col, fn) with a custom coordinate fn"
-    )
+    _resolve_transform(from_srid, to_srid)
+    return _reproject_with(
+        col, lambda: _resolve_transform(from_srid, to_srid))
 
 
 def _reproject_with(col: Column, make_fn) -> Column:
-    """Shared plumbing: apply ``fn(x, y) -> (x', y')`` to every WKT coord
-    pair, vectorized via a pandas UDF.  ``make_fn`` is called once per
-    executor process so per-batch setup cost is amortized.
+    """Apply ``fn(x, y) -> (x', y')`` to every WKT coord pair through an
+    Arrow-batched pandas UDF.  ``make_fn`` builds ``fn`` once per batch,
+    on the executor (the closure is what ships to the worker).
     """
-    import re as _re
-
     from pyspark.sql.functions import pandas_udf
-
-    coord_re = _re.compile(_COORD_RE)
 
     @pandas_udf("string")
     def _reproject(s: pd.Series) -> pd.Series:
         fn = make_fn()
-
-        def one(wkt):
-            if wkt is None:
-                return None
-
-            def repl(m):
-                x, y = fn(float(m.group(1)), float(m.group(2)))
-                return f"{x:.8f} {y:.8f}"
-
-            return coord_re.sub(repl, wkt)
-
-        return s.map(one)
+        return s.map(lambda w: None if w is None else _rewrite_coords(w, fn))
 
     return _reproject(col)
 
@@ -264,13 +256,11 @@ def _reproject_with(col: Column, make_fn) -> Column:
 def _parse_rings(wkt: str):
     """[(ring_coords_text, [(x, y), ...]), ...] for every parenthesized
     ring of ``wkt`` (innermost parens), plus the header text."""
-    import re as _re
-
     rings = _re.findall(r"\(([^()]+)\)", wkt)
     out = []
     for body in rings:
         pts = [(float(a), float(b))
-               for a, b in _re.findall(_COORD_RE, body)]
+               for a, b in _COORD_RE.findall(body)]
         out.append((body, pts))
     return out
 
@@ -340,10 +330,11 @@ def _dp_simplify(pts, tol: float):
 
 
 def _simplify_one(wkt, tol: float):
-    """Per-geometry ST_Simplify core (shared by the Column API and the
-    SQL-gateway registration)."""
-    import re as _re
-
+    """Per-geometry ST_Simplify core (SQL ``st_simplify``): Douglas-Peucker
+    each ring to ``tol`` (same planar unit as the coordinates).  Ring
+    endpoints are preserved; a closed ring that would collapse below a
+    triangle is returned unsimplified (the conservative choice for
+    parcel exports).  POINT/MULTIPOINT pass through untouched."""
     if wkt is None or "EMPTY" in wkt.upper():
         return wkt
     head = wkt.strip().split("(", 1)[0].strip().upper()
@@ -352,14 +343,17 @@ def _simplify_one(wkt, tol: float):
 
     def repl(m):
         pts = [(float(a), float(b))
-               for a, b in _re.findall(_COORD_RE, m.group(1))]
+               for a, b in _COORD_RE.findall(m.group(1))]
         return "(" + _fmt(_dp_simplify(pts, tol)) + ")"
 
     return _re.sub(r"\(([^()]+)\)", repl, wkt)
 
 
 def _hull_one(wkt):
-    """Per-geometry ST_ConvexHull core (monotone chain, CCW)."""
+    """Per-geometry ST_ConvexHull core (SQL ``st_convexhull``):
+    monotone-chain hull over ALL vertices of the geometry, as POLYGON
+    WKT (CCW, closed).  Degenerate inputs follow PostGIS: a single point
+    -> POINT, collinear sets -> LINESTRING."""
     def cross(o, a, b):
         return ((a[0] - o[0]) * (b[1] - o[1])
                 - (a[1] - o[1]) * (b[0] - o[0]))
@@ -387,67 +381,15 @@ def _hull_one(wkt):
     return f"POLYGON (({_fmt(hull + [hull[0]])}))"
 
 
-def simplify_wkt(col: Column, tolerance: float) -> Column:
-    """ST_Simplify: Douglas-Peucker each ring of each geometry to
-    ``tolerance`` (same planar unit as the coordinates).  Ring
-    endpoints are preserved; a closed ring that would collapse below a
-    triangle is returned unsimplified (the conservative choice for
-    parcel exports).  POINT/MULTIPOINT pass through untouched.
-    Arrow-batched pandas UDF — map-only, no shuffle."""
-    from pyspark.sql.functions import pandas_udf
-
-    tol = float(tolerance)
-
-    @pandas_udf("string")
-    def _simplify(s: pd.Series) -> pd.Series:
-        return s.map(lambda w: _simplify_one(w, tol))
-
-    return _simplify(col)
-
-
-def convex_hull_wkt(col: Column) -> Column:
-    """ST_ConvexHull: monotone-chain hull over ALL vertices of the
-    geometry, as POLYGON WKT (CCW, closed).  Degenerate inputs follow
-    PostGIS: a single point -> POINT, collinear sets -> LINESTRING."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _hull(s: pd.Series) -> pd.Series:
-        return s.map(_hull_one)
-
-    return _hull(col)
-
-
 def _transform_one(wkt, from_srid: int, to_srid: int, cache: dict):
     """Per-geometry ST_Transform core: reproject every coordinate pair.
     ``cache`` memoizes the (from, to) -> fn resolution per batch."""
-    import re as _re
-
     if wkt is None or from_srid == to_srid:
         return wkt
     key = (int(from_srid), int(to_srid))
-    fn = cache.get(key)
-    if fn is None:
-        if _HAVE_PYPROJ:
-            fn = pyproj.Transformer.from_crs(
-                f"EPSG:{key[0]}", f"EPSG:{key[1]}",
-                always_xy=True).transform
-        else:
-            from .projection import builtin_transform
-
-            fn = builtin_transform(*key)
-        if fn is None:
-            raise NotImplementedError(
-                f"no transform for EPSG:{key[0]} -> EPSG:{key[1]} "
-                "(pyproj not installed; pair outside the built-in "
-                "LCC/TM/UTM/WebMercator projections)")
-        cache[key] = fn
-
-    def repl(m):
-        x, y = fn(float(m.group(1)), float(m.group(2)))
-        return f"{x:.8f} {y:.8f}"
-
-    return _re.sub(_COORD_RE, repl, wkt)
+    if key not in cache:
+        cache[key] = _resolve_transform(*key)
+    return _rewrite_coords(wkt, cache[key])
 
 
 def _snaptogrid_one(wkt, size: float):
@@ -456,8 +398,6 @@ def _snaptogrid_one(wkt, size: float):
     round-trip ``repr`` formatting keeps kept precision exact.  Snapped
     geometry may degenerate (PostGIS keeps duplicates too — follow with
     st_makevalid for strict OGC output)."""
-    import re as _re
-
     if wkt is None or size is None or size <= 0:
         return wkt
 
@@ -468,7 +408,7 @@ def _snaptogrid_one(wkt, size: float):
         y = round(float(m.group(2)) / size) * size
         return f"{_fmt_num(x)} {_fmt_num(y)}"
 
-    return _re.sub(_COORD_RE, repl, wkt)
+    return _COORD_RE.sub(repl, wkt)
 
 
 # every name register_vertex_ops registers (it calls register_overlay_ops)

@@ -12,10 +12,9 @@ from .cdc import apply_changes, last_wins
 from .intervals import interval_overlap_join
 from .classifier import quality_classifier_fit, quality_classifier_score
 from .skew import salted_join, skew_report
-from .sampling import (deterministic_group_sample, hash_split,
-                       md5_bucket, mix_sources, mix_sources_md5,
-                       stratified_sample, upsample_sources,
-                       with_md5_split_label, with_split_label)
+from .sampling import (deterministic_group_sample, md5_bucket,
+                       mix_sources_md5, stratified_sample,
+                       upsample_sources, with_md5_split_label)
 from .packing import (pack_documents, pack_summary,
                       write_training_shards)
 from .chunking import chunk_documents
@@ -70,8 +69,8 @@ __all__ = [
     "tf_idf_terms", "bm25_scores", "bm25_topk", "benchmark_contamination",
     "kmeans_assign", "kmeans_fit", "kmeans_inertia", "semantic_dedup_pairs",
     "cluster_coreset",
-    "hash_split", "mix_sources", "stratified_sample", "with_split_label",
-    "md5_bucket", "with_md5_split_label", "deterministic_group_sample",
+    "stratified_sample", "md5_bucket", "with_md5_split_label",
+    "deterministic_group_sample",
     "mix_sources_md5", "upsample_sources",
     "doc_frequency", "top_ngrams", "minhash_near_dups_md5",
     "pack_documents", "pack_summary",

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import gated_broadcast
 from ..util import retain_cache as _retain_cache
 
 
@@ -391,57 +392,14 @@ def minhash_near_dups_fast(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 # SimHash
 
-def simhash64(text_col):
-    """64-bit SimHash over whitespace tokens, as a bigint column (map-side).
+def simhash64_md5(seed: int = 0x5173_0A11):
+    """Vectorized SimHash pandas UDF (text → bigint signature) over
+    distinct lowercased whitespace tokens.
 
-    Per token: 64-bit xxhash64; per bit: +1 if set else -1; sign of the
-    per-bit sum forms the signature.  Expressed with array ops so it stays
-    JVM-side (aggregate over tokens of a 64-wide int array).
-    """
-    tokens = F.array_distinct(
-        F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != ""))
-
-    def token_bits(t):
-        # literal shift amounts (shiftright needs a Python int), one ±1
-        # entry per bit of the token's 64-bit hash; the hash binds ONCE
-        # through a 1-element transform (Catalyst does not CSE through
-        # lambdas — inlining xxhash64(t) would hash the token 64 times)
-        def bits_of(h):
-            return F.array(*[
-                F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-                       F.lit(1)).otherwise(F.lit(-1))
-                for b in range(64)
-            ])
-
-        return F.element_at(
-            F.transform(F.array(F.xxhash64(t)), bits_of), 1)
-
-    bits = F.aggregate(
-        tokens,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(acc, token_bits(t), lambda a, v: a + v),
-    )
-    # pack sign bits into one bigint: zip the 64 counters with the literal
-    # bit values and OR-fold (single reference to `bits` keeps the
-    # expression tree linear)
-    bit_values = [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
-    signed = F.zip_with(
-        bits, F.array(*[F.lit(v).cast("long") for v in bit_values]),
-        lambda v, bv: F.when(v > 0, bv).otherwise(F.lit(0).cast("long")))
-    return F.aggregate(signed, F.lit(0).cast("long"),
-                       lambda acc, x: acc.bitwiseOR(x))
-
-
-def simhash64_fast(seed: int = 0x5173_0A11):
-    """Vectorized SimHash pandas UDF (text → bigint signature).
-
-    The JVM expression version (:func:`simhash64`) evaluates 64
-    interpreted ``when`` branches per token; this one hashes tokens with
-    hashlib's C md5 (first 8 bytes → uint64, xor-folded with ``seed``)
-    and packs sign bits with one NumPy broadcast per document — measured
-    ~20× on the x05 bench path.  Hash family differs from the JVM
-    version (both are valid SimHash token hashes; don't mix signatures
-    across the two).
+    Each token hashes with hashlib's C md5 (first 8 bytes → uint64,
+    xor-folded with ``seed``); sign bits pack with one NumPy broadcast
+    per document.  md5 is the portable family: a SQL engine with
+    ``md5`` re-derives every signature bit (the x05 oracle does).
     """
     import hashlib
 
@@ -475,23 +433,20 @@ def simhash64_fast(seed: int = 0x5173_0A11):
 
 
 def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
-                      max_hamming: int = 3, fast: bool = False,
+                      max_hamming: int = 3,
                       max_bucket_size: int | None = 1000) -> DataFrame:
     """Pairs with SimHash hamming distance ≤ ``max_hamming`` (pigeonhole
     banding on 4×16-bit chunks — a pair within distance 3 must agree on at
     least one chunk, so candidates come from 4 equi-joins, not all pairs).
 
-    ``fast=True`` swaps the JVM expression signature for the vectorized
-    pandas UDF (:func:`simhash64_fast`) — the spelling for large corpora;
-    the banding/verification plan is identical.  ``max_bucket_size``
+    Signatures come from :func:`simhash64_md5`.  ``max_bucket_size``
     skips degenerate chunk buckets (replica floods make every copy share
     the full signature) — same guard and recall rationale as
     ``_banded_candidate_pairs``; the structs here are 16 bytes so the
     id-only rejoin is not worth two extra joins.
     """
-    sig_col = (simhash64_fast()(F.col(text_col)) if fast
-               else simhash64(F.col(text_col)))
-    sig = df.select(F.col(id_col).alias("__id"), sig_col.alias("__sig"))
+    sig = df.select(F.col(id_col).alias("__id"),
+                    simhash64_md5()(F.col(text_col)).alias("__sig"))
     chunks = sig.select(
         F.struct("__id", "__sig").alias("__m"),
         F.posexplode(F.array(*[
@@ -1167,8 +1122,7 @@ def near_dup_clusters(df: DataFrame, id_col: str, text_col: str,
 
 def benchmark_contamination(corpus: DataFrame, eval_df: DataFrame,
                             id_col: str, text_col: str, n: int = 13,
-                            min_hits: int = 1,
-                            broadcast_eval: bool = True) -> DataFrame:
+                            min_hits: int = 1) -> DataFrame:
     """Decontamination screen: which corpus documents contain word
     ``n``-grams that also appear in an evaluation/benchmark set — the
     standard pre-training hygiene pass (collide long n-grams, typically
@@ -1182,13 +1136,15 @@ def benchmark_contamination(corpus: DataFrame, eval_df: DataFrame,
     counts how many distinct eval documents it collides with.
 
     Scale shape: the corpus side explodes to a (doc, gram) inverted
-    index that never self-joins; the eval side is the benchmark — small
-    by construction — so with ``broadcast_eval`` (default) the gram
-    match is a MAP-SIDE join over the corpus scan and the only exchange
-    is the per-doc hit aggregation on the corpus key.  Set it False if
-    the "benchmark" is itself huge (e.g. screening against another
-    corpus); the join then shuffles both sides by gram — the same
-    delta-vs-corpus shape as :func:`incremental_near_dups_md5`.
+    index that never self-joins.  The eval side is size-gated
+    (:func:`~datum_spark.util.gated_broadcast` on the eval text, × ``n``
+    for the gram explode): a benchmark — small by construction —
+    broadcasts, so the gram match is a MAP-SIDE join over the corpus
+    scan and the only exchange is the per-doc hit aggregation on the
+    corpus key.  A "benchmark" that is itself huge (e.g. screening
+    against another corpus) stays unhinted and the join shuffles both
+    sides by gram — the same delta-vs-corpus shape as
+    :func:`incremental_near_dups_md5`.
     """
     def grams_of(df: DataFrame, out_id: str) -> DataFrame:
         words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
@@ -1221,8 +1177,7 @@ def benchmark_contamination(corpus: DataFrame, eval_df: DataFrame,
                      F.explode("__grams").alias("__g")))
     ev = (_retain_cache(grams_of(eval_df, "__eval_id"))
           .select("__eval_id", F.explode("__grams").alias("__g")))
-    if broadcast_eval:
-        ev = F.broadcast(ev)
+    ev = gated_broadcast(ev, probe=eval_df.select(text_col), expansion=n)
     hits = (inv_c.join(ev, "__g")
                  .groupBy("__id")
                  .agg(F.first("__ng").alias("n_grams"),

@@ -77,42 +77,6 @@ def extract_image_features(df: DataFrame, content_col: str = "content",
     return df.mapInPandas(batches, schema=out_schema)
 
 
-def resize_images(df: DataFrame, content_col: str = "content",
-                  target: tuple[int, int] = (224, 224),
-                  fake_decode: bool = False) -> DataFrame:
-    """Resize plumbing: content → resized content + final dims.
-
-    STUB decode/re-encode (no image lib in this runtime): with
-    ``fake_decode`` the "resized" payload is a deterministic fixed-length
-    digest of the original bytes (stable, exercises the binary-in/binary-out
-    Arrow path and the schema contract); the batch flow, column pruning and
-    output schema are the real interface a PIL-backed version drops into.
-    """
-    if not fake_decode:
-        raise NotImplementedError(
-            "image resizing requires an image library (e.g. PIL) not present "
-            "in this runtime; pass fake_decode=True to exercise the pipeline")
-    carry = [c for c in df.columns if c != content_col]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name != content_col
-    ) + f", {content_col} binary, width int, height int"
-    w, h = target
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in it:
-            out = pdf[carry].copy()
-            out[content_col] = pdf[content_col].map(
-                lambda b: hashlib.sha256(bytes(b or b"")).digest())
-            out["width"] = w
-            out["height"] = h
-            yield out
-
-    return df.mapInPandas(batches, schema=out_schema)
-
-
 def extract_audio_features(df: DataFrame, content_col: str = "content",
                            sample_rate: int = 16000,
                            fake_decode: bool = False) -> DataFrame:

@@ -1,14 +1,21 @@
 """Sampling operators for training-data pipelines.
 
-- :func:`hash_split` — deterministic train/test membership from a key
-  hash.  Unlike ``randomSplit`` (which depends on partitioning and row
-  order), membership is a pure function of the key: stable across runs,
-  cluster sizes, and re-partitioning — the property a 100 TB pipeline
-  needs so that a document never migrates between train and eval.
-- :func:`stratified_sample` — per-stratum fractions via ``sampleBy``
-  (seeded Bernoulli per row).
+Split, mix and sample membership is a pure function of the row key,
+never of ``rand()`` or partitioning: stable across runs, cluster sizes
+and re-partitioning — the property a 100 TB pipeline needs so that a
+document never migrates between train and eval.  Every keyed decision
+uses one hash family, the portable md5 bucket (:func:`md5_bucket`),
+which any engine with ``md5`` recomputes:
 
-Both are map-side only (no shuffle).
+- :func:`with_md5_split_label` / :func:`leakage_safe_split` —
+  train/val/test labels;
+- :func:`mix_sources_md5` / :func:`upsample_sources` — per-source
+  re-weighting;
+- :func:`deterministic_group_sample`, :func:`weighted_sample`,
+  :func:`recency_weighted_sample` and the other keyed draws.
+
+:func:`stratified_sample` (seeded Bernoulli per row via ``sampleBy``)
+is the one sampler whose membership depends on partitioning.
 """
 
 from __future__ import annotations
@@ -16,45 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_BUCKETS = 1_000_000
-
-
-def hash_split(df: DataFrame, key_col: str, test_fraction: float = 0.1,
-               seed: int = 42) -> tuple[DataFrame, DataFrame]:
-    """Split into (train, test): a row is in test iff
-    ``pmod(xxhash64(key, seed), 1e6) < test_fraction * 1e6``.
-
-    All rows sharing a key land on the same side (leak-proof for grouped
-    data like documents of one source); the split is reproducible from the
-    data alone.
-    """
-    if not 0.0 <= test_fraction <= 1.0:
-        raise ValueError("test_fraction must be in [0, 1]")
-    bucket = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)),
-                    F.lit(_BUCKETS))
-    cut = int(test_fraction * _BUCKETS)
-    return (df.filter(bucket >= cut), df.filter(bucket < cut))
-
-
-def with_split_label(df: DataFrame, key_col: str,
-                     test_fraction: float = 0.1, seed: int = 42,
-                     out_col: str = "split") -> DataFrame:
-    """Single-pass variant: adds 'train'/'test' as a column."""
-    bucket = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)),
-                    F.lit(_BUCKETS))
-    cut = int(test_fraction * _BUCKETS)
-    return df.withColumn(out_col, F.when(bucket < cut, F.lit("test"))
-                                   .otherwise(F.lit("train")))
-
-
 def md5_bucket(col, salt: str = "split"):
     """Deterministic uniform bucket in ``[0, 2^32)`` from a key — computed
     identically by ANY engine with ``md5`` (Spark, DuckDB, Postgres, ...):
     ``int(md5(salt-key)[:8], 16)``.
 
-    Use when split/sample membership must be auditable OUTSIDE Spark
-    (xxhash64 in :func:`hash_split` is Spark-specific; md5 costs more per
-    row but is the portable contract).  Map-side only.
+    The library's one key hash for split/sample membership: md5 costs
+    more per row than Spark's xxhash64, but membership stays auditable
+    outside Spark.  Map-side only.
     """
     s = F.concat_ws("-", F.lit(salt), col.cast("string"))
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
@@ -77,9 +53,9 @@ def with_md5_split_label(df: DataFrame, key_col: str,
                          salt: str = "split",
                          out_col: str = "split") -> DataFrame:
     """Multi-way deterministic split ('train'/'val'/'test' by default)
-    whose membership any md5-capable engine can recompute — the portable
-    sibling of :func:`with_split_label`.  Same leak-proofness: membership
-    is a pure function of the key."""
+    whose membership any md5-capable engine can recompute.  Leak-proof
+    for grouped data: all rows sharing a key land on the same side, and
+    membership is a pure function of the key."""
     fractions = fractions or {"train": 0.8, "val": 0.1, "test": 0.1}
     cuts = md5_split_cuts(fractions)
     bucket = md5_bucket(F.col(key_col), salt)
@@ -150,41 +126,27 @@ def stratified_sample(df: DataFrame, strata_col: str,
     return df.sampleBy(strata_col, fractions=fractions, seed=seed)
 
 
-def mix_sources(df: DataFrame, weights: dict, source_col: str = "source",
-                id_col: str = "doc_id", seed: int = 42,
-                default_weight: float = 1.0) -> DataFrame:
-    """Deterministic corpus re-weighting ("data mixing"): keep each row of
-    source ``s`` with probability ``weights.get(s, default_weight)``,
-    decided by the row's id hash — not by ``rand()``.
-
-    Properties a 100 TB mixing job needs (all unit-tested):
-
-    - map-only, no shuffle; the weight table compiles into the plan as a
-      CASE expression (no join, even for thousands of sources);
-    - reproducible from the data alone: stable across runs, partitioning,
-      and cluster size (same reason :func:`hash_split` avoids
-      ``randomSplit``);
-    - monotone in the weight: the keep-set at weight 0.2 is a subset of
-      the keep-set at 0.5, so mixture ratios can be re-tuned without
-      resampling churn (epoch-over-epoch cache reuse);
-    - weights > 1 are capped at 1 (upsampling needs row replication —
-      ``F.explode(F.array_repeat(...))`` — deliberately out of scope for
-      a keep/drop filter).
-    """
-    bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(_BUCKETS))
-    expr = F.lit(float(default_weight))
-    for src, w in sorted(weights.items()):
-        expr = F.when(F.col(source_col) == src, F.lit(float(w))
-                      ).otherwise(expr)
-    return df.filter(bucket < expr * _BUCKETS)
-
-
 def mix_sources_md5(df: DataFrame, weights: dict, source_col: str = "source",
                     id_col: str = "doc_id", salt: str = "mix",
                     default_weight: float = 1.0) -> DataFrame:
-    """:func:`mix_sources` over the portable md5 bucket — keep/drop
-    decisions any engine can recompute (same monotone-in-weight and
-    partitioning-independence properties)."""
+    """Deterministic corpus re-weighting ("data mixing"): keep each row of
+    source ``s`` with probability ``weights.get(s, default_weight)``,
+    decided by the row's md5 bucket (:func:`md5_bucket`) — not by
+    ``rand()`` — so any md5-capable engine recomputes the keep set.
+
+    Properties a 100 TB mixing job needs (all unit-tested):
+
+    - keep rates follow the weights;
+    - map-only, no shuffle; the weight table compiles into the plan as a
+      CASE expression (no join, even for thousands of sources);
+    - reproducible from the data alone: stable across runs, partitioning,
+      and cluster size;
+    - monotone in the weight: the keep-set at weight 0.2 is a subset of
+      the keep-set at 0.5, so mixture ratios can be re-tuned without
+      resampling churn (epoch-over-epoch cache reuse);
+    - weights > 1 keep every row (upsampling needs row replication —
+      :func:`upsample_sources`).
+    """
     bucket = md5_bucket(F.col(id_col), salt)
     expr = F.lit(float(default_weight))
     for src, w in sorted(weights.items()):
@@ -239,7 +201,7 @@ def weighted_sample(df: DataFrame, k: int, weight_col: str, id_col: str,
     row's win probability is proportional to its weight, and the whole
     draw is a pure function of (id, salt) — reproducible on any engine,
     any partitioning, any cluster size (the same auditable-membership
-    contract as :func:`md5_split` / :func:`mix_sources_md5`, which a
+    contract as :func:`with_md5_split_label` / :func:`mix_sources_md5`, which a
     ``rand()``-based sampler cannot give).
 
     With ``group_col``, k rows per group (stratified weighted draw).

@@ -948,97 +948,6 @@ def pq_adc_topk(queries: DataFrame, codes: DataFrame, codebooks,
 
 
 # ---------------------------------------------------------------------------
-# Persistent PQ index (build-once / serve-many, the ivf_index_* posture)
-# ---------------------------------------------------------------------------
-
-def pq_index_build(corpus: DataFrame, index_path: str,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   m: int = 8, ksub: int = 16, iters: int = 3,
-                   quantize: int = 6) -> dict:
-    """Train PQ codebooks ONCE and persist the index as two parquet
-    tables under ``index_path``: ``codebooks/`` (s, c, center) and
-    ``codes/`` (id + ``code_0..code_{m-1}`` — 4 bytes/vector at the
-    defaults, the memory-compressed serving tier).  Serving never
-    touches raw vectors; :func:`pq_adc_topk` refits nothing.
-
-    Same daily-ingest posture as :func:`ivf_index_build`: build on the
-    corpus-refresh cadence, :func:`pq_index_add` assigns deltas against
-    the FROZEN codebooks, :func:`pq_index_query` serves any number of
-    query batches from the codes alone."""
-    import os as _os
-
-    codes, books = pq_train_encode(corpus, id_col, vec_col,
-                                   m=m, ksub=ksub, iters=iters,
-                                   quantize=quantize)
-    spark = corpus.sparkSession
-    rows = [(s, c, list(cent)) for s, book in enumerate(books)
-            for c, cent in enumerate(book)]
-    spark.createDataFrame(rows, "s int, c int, center array<double>") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(_os.path.join(index_path, "codebooks"))
-    codes.write.mode("overwrite") \
-        .parquet(_os.path.join(index_path, "codes"))
-    return {"m": m, "ksub": ksub,
-            "n_vectors": spark.read.parquet(
-                _os.path.join(index_path, "codes")).count()}
-
-
-def _pq_load_books(spark, index_path: str):
-    import os as _os
-
-    rows = spark.read.parquet(
-        _os.path.join(index_path, "codebooks")).collect()
-    m = max(r["s"] for r in rows) + 1
-    ksub = max(r["c"] for r in rows) + 1
-    books = [[None] * ksub for _ in range(m)]
-    for r in rows:
-        books[r["s"]][r["c"]] = list(r["center"])
-    return books
-
-
-def pq_index_add(delta: DataFrame, index_path: str,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 quantize: int = 6) -> int:
-    """Encode new vectors against the FROZEN codebooks and append their
-    codes — one map-only pass over the delta (the x109 discipline);
-    codebooks drifting from the data degrade ADC accuracy gracefully,
-    rebuild on the refresh cadence.  Returns rows appended."""
-    import os as _os
-
-    spark = delta.sparkSession
-    books = _pq_load_books(spark, index_path)
-    m = len(books)
-    base = delta.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col),
-        F.expr(_code_array_sql(
-            books, quantize,
-            f"cast({vec_col} as array<double>)")).alias("__cs"))
-    out = base.select(
-        F.col(id_col),
-        *[F.col("__cs")[s].alias(f"code_{s}") for s in range(m)])
-    out.write.mode("append").parquet(_os.path.join(index_path, "codes"))
-    return out.count()
-
-
-def pq_index_query(queries: DataFrame, index_path: str, k: int = 10,
-                   qid_col: str = "vec_id", qvec_col: str = "embedding",
-                   quantize: int = 6) -> DataFrame:
-    """Serve ADC top-k from a persisted PQ index — no training, no raw
-    corpus: codebooks load driver-side (m·ksub·dsub floats), codes scan
-    from parquet.  Plan-identical to :func:`pq_adc_topk` over the same
-    codes, so a fresh index answers exactly what the train-then-search
-    path answers."""
-    import os as _os
-
-    spark = queries.sparkSession
-    books = _pq_load_books(spark, index_path)
-    codes = spark.read.parquet(_os.path.join(index_path, "codes"))
-    return pq_adc_topk(queries, codes, books, k=k,
-                       qid_col=qid_col, qvec_col=qvec_col,
-                       quantize=quantize)
-
-
-# ---------------------------------------------------------------------------
 # OPQ: optimized product quantization (Ge et al. 2013) — rotate the space
 # before PQ so the code budget aligns with the data's geometry.  This is the
 # DETERMINISTIC PARAMETRIC variant on the x185 substrate: instead of the
@@ -1471,7 +1380,7 @@ def ivfpq_index_build(corpus: DataFrame, index_path: str,
     at-least-once producers, serving gains snapshot isolation against
     concurrent adds — the index becomes a lake table.
 
-    Same daily-ingest posture as ``ivf_index_*`` / ``pq_index_*``:
+    Same daily-ingest posture as ``ivf_index_*``:
     rebuild on the corpus-refresh cadence, :func:`ivfpq_index_add`
     assigns+encodes deltas against the FROZEN quantizers,
     :func:`ivfpq_index_query` serves refit-free.
@@ -1548,7 +1457,13 @@ def _ivfpq_load(spark, index_path: str):
     crows = (spark.read.parquet(_os.path.join(index_path, "coarse"))
              .orderBy("cell").collect())
     coarse = [list(r["center"]) for r in crows]
-    books = _pq_load_books(spark, index_path)
+    rows = spark.read.parquet(
+        _os.path.join(index_path, "codebooks")).collect()
+    m = max(r["s"] for r in rows) + 1
+    ksub = max(r["c"] for r in rows) + 1
+    books = [[None] * ksub for _ in range(m)]
+    for r in rows:
+        books[r["s"]][r["c"]] = list(r["center"])
     return coarse, books
 
 

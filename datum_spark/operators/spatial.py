@@ -336,33 +336,3 @@ def dbscan(points: DataFrame, id_col: str, x_col: str, y_col: str,
                       F.col("__lab").alias(cluster_col),
                       F.coalesce("__core", F.lit(False)).alias(core_col)))
     return out
-
-
-def cluster_within(points: DataFrame, id_col: str, x_col: str,
-                   y_col: str, distance: float,
-                   cluster_col: str = "cluster") -> DataFrame:
-    """PostGIS ``ST_ClusterWithin`` semantics: single-linkage clusters —
-    connected components of the "within ``distance``" graph.  Every
-    point gets a non-null ``cluster_col`` (= minimum member id;
-    isolated points label themselves).  Same grid-join + alternating-
-    star machinery as :func:`dbscan` without the density gate."""
-    pts = points.select(F.col(id_col).alias("__id"),
-                        F.col(x_col).cast("double").alias("__x"),
-                        F.col(y_col).cast("double").alias("__y"))
-    a = pts.select(F.col("__id").alias("__ia"),
-                   F.col("__x").alias("__xa"), F.col("__y").alias("__ya"))
-    b = pts.select(F.col("__id").alias("__ib"),
-                   F.col("__x").alias("__xb"), F.col("__y").alias("__yb"))
-    edges = (radius_join(a, b, "__xa", "__ya", "__xb", "__yb", distance,
-                         dist_col="__d")
-             .filter(F.col("__ia") < F.col("__ib"))
-             .select("__ia", "__ib"))
-    from .components import connected_components
-    comp = connected_components(edges)
-    return (pts.join(comp.withColumnRenamed("node", "__id"),
-                     "__id", "left")
-               .select(F.col("__id").alias(id_col),
-                       F.col("__x").alias(x_col),
-                       F.col("__y").alias(y_col),
-                       F.coalesce("component", "__id")
-                        .alias(cluster_col)))

@@ -64,8 +64,7 @@ class Table:
             if self.db.scheme == "file":
                 self._meta_cache = self.db._load_meta(self.name)
             else:
-                self._meta_cache = getattr(self.db, "_memory_meta", {}).get(
-                    self.name, {})
+                self._meta_cache = self.db._memory_meta.get(self.name, {})
         return self._meta_cache
 
     @property
@@ -617,6 +616,5 @@ class Table:
         if self.db.scheme == "file":
             self.db._store_meta(self.name, meta)
         else:
-            self.db._memory_meta = getattr(self.db, "_memory_meta", {})
             self.db._memory_meta[self.name] = meta
         self._meta_cache = meta

@@ -104,51 +104,6 @@ def test_sgd_twin_deterministic_and_partition_invariant(spark, toy):
     assert a == b == c
 
 
-# ---------------------------------------------------------------------------
-# persistent PQ index (similarity.py) — co-located with this round's ops
-
-def test_pq_index_build_query_equals_refit(spark, tmp_path):
-    from datum_spark.operators.similarity import (pq_adc_topk,
-                                                  pq_index_build,
-                                                  pq_index_query,
-                                                  pq_train_encode)
-    from datum_spark.sources.registry import read_parquet_normalized
-
-    emb = read_parquet_normalized(
-        spark, "/root/testdata/sf0.001/embeddings.parquet")
-    idx = str(tmp_path / "pq")
-    meta = pq_index_build(emb, idx, m=8, ksub=8, iters=2)
-    assert meta["n_vectors"] == emb.filter("embedding is not null").count()
-    qs = emb.filter("vec_id < 5")
-    served = {(r["query_id"], r["vec_id"], r["rnk"])
-              for r in pq_index_query(qs, idx, k=5).collect()}
-    codes, books = pq_train_encode(emb, m=8, ksub=8, iters=2)
-    refit = {(r["query_id"], r["vec_id"], r["rnk"])
-             for r in pq_adc_topk(qs, codes, books, k=5).collect()}
-    assert served == refit and len(served) == 25
-
-
-def test_pq_index_add_assign_only(spark, tmp_path):
-    from datum_spark.operators.similarity import (pq_index_add,
-                                                  pq_index_build,
-                                                  pq_index_query)
-    from datum_spark.sources.registry import read_parquet_normalized
-
-    emb = read_parquet_normalized(
-        spark, "/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.filter("vec_id >= 20")
-    delta = emb.filter("vec_id < 20")
-    idx = str(tmp_path / "pq2")
-    pq_index_build(base, idx, m=8, ksub=8, iters=2)
-    n = pq_index_add(delta, idx)
-    assert n == delta.filter("embedding is not null").count()
-    # a delta vector queried against the index must retrieve itself at
-    # rank 1 (its own code has ADC distance == the minimum possible)
-    q = emb.filter("vec_id = 3")
-    top = pq_index_query(q, idx, k=1).collect()
-    assert top and top[0]["vec_id"] == 3 and top[0]["rnk"] == 1
-
-
 def test_training_partitioning_invariant(spark, toy):
     """The rounding-absorption contract the x188 oracle rests on:
     different physical partitionings change Spark's summation order,

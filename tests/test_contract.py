@@ -27,6 +27,17 @@ def test_all_callables():
     assert all(callable(fn) for fn in entry.queries().values())
 
 
+def test_public_exports_resolve():
+    """Every name a package exports is an attribute of it, so deleting an
+    operator cannot leave a stale ``__all__`` entry behind."""
+    import datum_spark.functions
+    import datum_spark.operators
+
+    for pkg in (datum_spark.operators, datum_spark.functions):
+        missing = [n for n in pkg.__all__ if not hasattr(pkg, n)]
+        assert not missing, (pkg.__name__, missing)
+
+
 def test_bench_stdout_line_fits_driver_tail():
     """The driver parses the LAST ~2000 chars of bench stdout; the line
     must fit whole at any query count, never eliding error entries."""

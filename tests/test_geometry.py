@@ -688,10 +688,13 @@ def test_polygon_predicates_malformed_input(spark):
 
 
 def test_simplify_wkt(spark):
-    """Douglas–Peucker: near-collinear vertices drop at tolerance,
-    shape-defining corners survive; rings stay closed; points pass
-    through."""
-    from datum_spark.functions.geometry import simplify_wkt
+    """SQL st_simplify, Douglas–Peucker: near-collinear vertices drop at
+    tolerance, shape-defining corners survive; rings stay closed; points
+    pass through."""
+    from datum_spark.functions.geometry_sql import (
+        register_geometry_sql_functions)
+
+    register_geometry_sql_functions(spark)
 
     rows = [
         # a line with one 0.1-deviation midpoint: gone at tol 0.5
@@ -703,19 +706,18 @@ def test_simplify_wkt(spark):
     ]
     df = spark.createDataFrame(rows, "wkt string")
     out = [r["o"] for r in
-           df.select(simplify_wkt(F.col("wkt"), 0.5).alias("o")).collect()]
+           df.selectExpr("st_simplify(wkt, 0.5) AS o").collect()]
     assert out[0] == "LINESTRING (0 0, 10 0, 10 10)"
     assert out[1] == "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
     assert out[2] == "POINT (3 4)" and out[3] is None
     # tolerance 0 keeps everything
     keep = [r["o"] for r in
-            df.limit(1).select(simplify_wkt(F.col("wkt"), 0.0)
-                               .alias("o")).collect()]
+            df.limit(1).selectExpr("st_simplify(wkt, 0.0) AS o").collect()]
     assert keep[0] == "LINESTRING (0 0, 5 0.1, 10 0, 10 10)"
     # a ring that would collapse below a triangle is kept whole
     tiny = spark.createDataFrame(
         [("POLYGON ((0 0, 1 0, 1 1, 0 0))",)], "wkt string")
-    [r] = tiny.select(simplify_wkt(F.col("wkt"), 100.0).alias("o")).collect()
+    [r] = tiny.selectExpr("st_simplify(wkt, 100.0) AS o").collect()
     assert r["o"] == "POLYGON ((0 0, 1 0, 1 1, 0 0))"
 
 
@@ -743,7 +745,12 @@ def test_coordinate_roundtrip_formatting():
 
 
 def test_convex_hull_wkt(spark):
-    from datum_spark.functions.geometry import convex_hull_wkt
+    """SQL st_convexhull: monotone-chain hull, PostGIS degenerate cases."""
+    from datum_spark.functions.geometry import _hull_one
+    from datum_spark.functions.geometry_sql import (
+        register_geometry_sql_functions)
+
+    register_geometry_sql_functions(spark)
 
     rows = [
         # square + interior point: hull is the square
@@ -754,25 +761,18 @@ def test_convex_hull_wkt(spark):
     ]
     df = spark.createDataFrame(rows, "wkt string")
     out = [r["o"] for r in
-           df.select(convex_hull_wkt(F.col("wkt")).alias("o")).collect()]
+           df.selectExpr("st_convexhull(wkt) AS o").collect()]
     assert out[0] == "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
     assert out[1] == "POINT (1 2)"
     assert out[2] == "LINESTRING (0 0, 5 5)"
     # hull of a hull is itself (idempotence), and every input vertex is
     # inside-or-on it — checked via the SQL predicate pack
-    from datum_spark.functions.geometry_sql import (
-        register_geometry_sql_functions,
-    )
-
-    register_geometry_sql_functions(spark)
     h = out[3]
     [r] = spark.sql(
         f"SELECT st_contains('{h}', 'MULTIPOINT ((0 0), (3 1), (6 0), "
         f"(3 8))') AS all_in").collect()
     # boundary vertices: contains is half-open, so check intersects too
-    [r2] = spark.createDataFrame([(h,)], "wkt string").select(
-        convex_hull_wkt(F.col("wkt")).alias("o")).collect()
-    assert r2["o"] == h
+    assert _hull_one(h) == h
 
 
 def test_simplify_and_hull_in_sql_gateway(tmp_db):

@@ -8,7 +8,6 @@ from datum_spark.operators.multimodal import (
     attach_media_metadata,
     extract_audio_features,
     extract_image_features,
-    resize_images,
     sample_video_frames,
 )
 
@@ -38,21 +37,6 @@ def test_image_features_fake(media):
 def test_image_features_gated(media):
     with pytest.raises(Exception, match="image"):
         extract_image_features(media, fake_decode=False).collect()
-
-
-def test_resize_fake(media):
-    out = resize_images(media, target=(64, 64), fake_decode=True).collect()
-    assert all(r["width"] == 64 and r["height"] == 64 for r in out)
-    assert all(len(bytes(r["content"])) == 32 for r in out)  # sha256 stub
-    # deterministic: same input → same payload
-    out2 = resize_images(media, target=(64, 64), fake_decode=True).collect()
-    assert {bytes(r["content"]) for r in out} == {bytes(r["content"])
-                                                  for r in out2}
-
-
-def test_resize_gated(media):
-    with pytest.raises(NotImplementedError):
-        resize_images(media)
 
 
 def test_audio_features_fake(media):

@@ -93,16 +93,28 @@ def test_simhash_near_dups(docs):
 
 
 def test_simhash_near_dups_fast(docs):
-    """The vectorized signature stage preserves the SimHash invariants
+    """The vectorized md5 signature stage preserves the SimHash invariants
     (identical docs → distance 0; near dups within budget; distinct docs
-    outside it) even though its hash family differs from the JVM path."""
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in simhash_near_dups(docs, "doc_id", "text",
-                                        max_hamming=10,
-                                        fast=True).collect()}
+    outside it), and its pairs do not depend on how rows are partitioned."""
+    from datum_spark.operators.dedup import simhash64_md5
+
+    sigs = {r["doc_id"]: r["sig"] for r in
+            docs.select("doc_id",
+                        simhash64_md5()(F.col("text")).alias("sig"))
+                .collect()}
+    assert sigs[1] == sigs[4]            # identical text → same signature
+    assert sigs[1] != sigs[3]
+
+    def pairs_of(df):
+        return {(r["id_a"], r["id_b"]): r["hamming"]
+                for r in simhash_near_dups(df, "doc_id", "text",
+                                           max_hamming=10).collect()}
+
+    pairs = pairs_of(docs)
     assert pairs[(1, 4)] == 0
     assert (1, 2) in pairs
     assert (1, 3) not in pairs
+    assert pairs_of(docs.repartition(3)) == pairs
 
 
 def test_ngram_jaccard_exact_values(docs):
@@ -269,27 +281,6 @@ def test_repetition_ratio(spark):
     assert out[3] == 0.0        # empty text guarded, no div-by-zero
 
 
-def test_contamination_overlap_and_decontaminate(spark):
-    from datum_spark.operators.contamination import (decontaminate,
-                                                     ngram_overlap)
-
-    corpus = spark.createDataFrame(
-        [(1, "the quick brown fox jumps high"),   # shares "the quick brown"
-         (2, "completely unrelated words entirely"),
-         (3, "too short")],                        # < 3 words → no grams
-        "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(100, "the quick brown dog")], "doc_id long, text string")
-
-    overlap = {r["doc_id"]: r["n_shared"]
-               for r in ngram_overlap(corpus, bench).collect()}
-    assert overlap == {1: 1}   # only doc 1, exactly one shared 3-gram
-
-    clean = sorted(r["doc_id"]
-                   for r in decontaminate(corpus, bench).collect())
-    assert clean == [2, 3]
-
-
 def test_cosine_top_k_exact(spark):
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (10, [1.0, 0.1]), (11, [0.0, 1.0]), (12, [1.0, 0.0]),
@@ -434,36 +425,6 @@ def test_top_k_per_group(smoke_db):
     assert all(r["count"] <= 2 for r in counts)
 
 
-def test_hash_split_disjoint_exhaustive_stable(smoke_db):
-    from datum_spark.operators import hash_split
-
-    docs = smoke_db["documents"].df()
-    train, test = hash_split(docs, "doc_id", test_fraction=0.2)
-    n, tr, te = docs.count(), train.count(), test.count()
-    assert tr + te == n and te > 0
-    assert 0.1 < te / n < 0.3  # fraction roughly honored
-    # stable: same ids land in test on a second evaluation
-    _, test2 = hash_split(docs, "doc_id", test_fraction=0.2)
-    ids = {r["doc_id"] for r in test.select("doc_id").collect()}
-    ids2 = {r["doc_id"] for r in test2.select("doc_id").collect()}
-    assert ids == ids2
-    # repartitioning must not change membership
-    _, test3 = hash_split(docs.repartition(7), "doc_id", test_fraction=0.2)
-    assert {r["doc_id"] for r in test3.select("doc_id").collect()} == ids
-
-
-def test_with_split_label_matches_hash_split(smoke_db):
-    from datum_spark.operators import hash_split, with_split_label
-
-    docs = smoke_db["documents"].df()
-    labeled = with_split_label(docs, "doc_id", test_fraction=0.2)
-    lab_test = {r["doc_id"] for r in
-                labeled.filter(F.col("split") == "test")
-                       .select("doc_id").collect()}
-    _, test = hash_split(docs, "doc_id", test_fraction=0.2)
-    assert lab_test == {r["doc_id"] for r in test.select("doc_id").collect()}
-
-
 def test_stratified_sample_respects_fractions(smoke_db):
     from datum_spark.operators import stratified_sample
 
@@ -575,7 +536,7 @@ def test_asof_join_semantics(spark):
                    "c": None}    # no right row at or before 15 for k=2
 
 
-# -- mix_sources ------------------------------------------------------------
+# -- mix_sources_md5 (the corpus pipeline's mixer) -------------------------
 
 def _mix_fixture(spark):
     rows = [(i, "web" if i % 2 == 0 else "books") for i in range(2000)]
@@ -583,28 +544,28 @@ def _mix_fixture(spark):
 
 
 def test_mix_sources_rates_and_determinism(spark):
-    from datum_spark.operators.sampling import mix_sources
+    from datum_spark.operators.sampling import mix_sources_md5
 
     df = _mix_fixture(spark)
-    kept = mix_sources(df, {"web": 0.3, "books": 1.0})
+    kept = mix_sources_md5(df, {"web": 0.3, "books": 1.0})
     counts = {r["source"]: r["n"] for r in
               kept.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert counts["books"] == 1000          # weight 1.0 keeps everything
     assert 200 <= counts["web"] <= 400      # ~0.3 of 1000
     # deterministic: identical keep-set regardless of partitioning
-    again = mix_sources(df.repartition(7), {"web": 0.3, "books": 1.0})
+    again = mix_sources_md5(df.repartition(7), {"web": 0.3, "books": 1.0})
     assert sorted(r["doc_id"] for r in kept.collect()) == \
            sorted(r["doc_id"] for r in again.collect())
 
 
 def test_mix_sources_monotone_in_weight(spark):
-    from datum_spark.operators.sampling import mix_sources
+    from datum_spark.operators.sampling import mix_sources_md5
 
     df = _mix_fixture(spark)
     low = {r["doc_id"] for r in
-           mix_sources(df, {"web": 0.2, "books": 0.2}).collect()}
+           mix_sources_md5(df, {"web": 0.2, "books": 0.2}).collect()}
     high = {r["doc_id"] for r in
-            mix_sources(df, {"web": 0.5, "books": 0.5}).collect()}
+            mix_sources_md5(df, {"web": 0.5, "books": 0.5}).collect()}
     assert low <= high
 
 
@@ -980,6 +941,29 @@ def test_benchmark_contamination_semantics(spark):
     assert out[2]["n_hits"] == 3 and out[2]["n_eval_docs"] == 2
 
 
+def test_contamination_overlap_and_decontaminate(spark):
+    """One gram shared with an eval doc counts once, and a left-anti join
+    on the flagged ids is the decontaminated corpus (x49/x50's shape)."""
+    from datum_spark.operators import benchmark_contamination
+
+    corpus = spark.createDataFrame(
+        [(1, "the quick brown fox jumps high"),   # shares "the quick brown"
+         (2, "completely unrelated words entirely"),
+         (3, "too short")],                        # < 3 words → no grams
+        "doc_id long, text string")
+    bench = spark.createDataFrame(
+        [(100, "the quick brown dog")], "doc_id long, text string")
+
+    flagged = benchmark_contamination(corpus, bench, "doc_id", "text", n=3)
+    overlap = {r["doc_id"]: r["n_hits"] for r in flagged.collect()}
+    assert overlap == {1: 1}   # only doc 1, exactly one shared 3-gram
+
+    clean = sorted(r["doc_id"] for r in
+                   corpus.join(flagged.select("doc_id"), "doc_id",
+                               "left_anti").collect())
+    assert clean == [2, 3]
+
+
 def test_benchmark_contamination_short_docs_emit_no_grams(spark):
     """Docs with < n words emit NO grams: an empty/short corpus doc must
     not 'collide' with an empty/short eval doc via a truncated gram and
@@ -991,7 +975,7 @@ def test_benchmark_contamination_short_docs_emit_no_grams(spark):
         "doc_id long, text string")
     corpus = spark.createDataFrame(
         [(1, ""), (2, "   "), (3, "two words"),
-         (4, "xx alpha beta gamma yy")],
+         (4, "xx alpha beta gamma yy"), (5, "too short")],
         "doc_id long, text string")
     out = {r["doc_id"] for r in
            benchmark_contamination(corpus, eval_df, "doc_id", "text",
@@ -999,21 +983,41 @@ def test_benchmark_contamination_short_docs_emit_no_grams(spark):
     assert out == {4}          # only the real trigram collision
 
 
-def test_benchmark_contamination_broadcast_flag_equivalent(spark):
-    from datum_spark.operators import benchmark_contamination
+def test_benchmark_contamination_forced_gate_equivalent(spark, monkeypatch):
+    """Both sides of the eval-side broadcast gate give the same rows; at
+    gate 0 the gram join is a shuffle join, not a broadcast."""
+    from pyspark.sql import types as T
 
-    eval_df = spark.createDataFrame(
-        [(900, "alpha beta gamma delta")], "doc_id long, text string")
+    from datum_spark import util
+    from datum_spark.operators import benchmark_contamination
+    from datum_spark.plans.inspect import explain_str
+
+    # a local relation: Catalyst sizes it (a Python-RDD frame it cannot)
+    eval_df = util.local_frame(
+        spark, [(900, "alpha beta gamma delta")],
+        T.StructType([T.StructField("doc_id", T.LongType()),
+                      T.StructField("text", T.StringType())]))
     corpus = spark.createDataFrame(
         [(1, "pp alpha beta gamma qq"), (2, "clean doc here")],
         "doc_id long, text string")
-    a = sorted(map(tuple, benchmark_contamination(
-        corpus, eval_df, "doc_id", "text", n=3,
-        broadcast_eval=True).collect()))
-    b = sorted(map(tuple, benchmark_contamination(
-        corpus, eval_df, "doc_id", "text", n=3,
-        broadcast_eval=False).collect()))
+    # only the gate's hint may broadcast: no size-based auto-broadcast
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        small = benchmark_contamination(corpus, eval_df, "doc_id", "text",
+                                        n=3)
+        a = sorted(map(tuple, small.collect()))
+        monkeypatch.setattr(util, "_GATED_BROADCAST_BYTES", 0)
+        forced = benchmark_contamination(corpus, eval_df, "doc_id",
+                                         "text", n=3)
+        b = sorted(map(tuple, forced.collect()))
+        small_plan, forced_plan = explain_str(small), explain_str(forced)
+    finally:
+        spark.conf.set(key, prev)
     assert a == b and len(a) == 1
+    assert "BroadcastHashJoin" in small_plan
+    assert "BroadcastHashJoin" not in forced_plan
 
 
 def test_bm25_topk_matches_single_query_scorer(spark):

@@ -77,33 +77,6 @@ def test_warm_session_compiles_each_class_once(spark):
     assert codegen_compiles(spark) - before == 0
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """Co-bucketed tables join without a shuffle: the sort-merge join reads
-    matching buckets pairwise, so the final plan has NO Exchange operator
-    (the 100 TB payoff of paying the shuffle once at write time)."""
-    from pyspark.sql import functions as F
-
-    from datum_spark.sources.bucketing import bucketed_join, write_bucketed
-
-    a = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
-    b = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb"))
-    write_bucketed(a, "bkt_a", "k", buckets=8, path=str(tmp_path / "a"))
-    write_bucketed(b, "bkt_b", "k", buckets=8, path=str(tmp_path / "b"))
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "bkt_a", "bkt_b", "k")
-        assert joined.count() == 10000
-        plan = explain_str(joined, mode="simple")
-        assert "SortMergeJoin" in plan, plan[:1500]
-        assert "Exchange" not in plan, plan[:1500]
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def test_count_prunes_to_zero_columns(smoke_db):
     """count() should not read data columns at all (metadata/row-group
     counts): ReadSchema is struct<>."""

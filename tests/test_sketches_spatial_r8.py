@@ -194,17 +194,6 @@ def test_dbscan_all_noise(spark):
     assert all(r["cluster"] is None and not r["is_core"] for r in rows)
 
 
-def test_cluster_within_single_linkage(spark):
-    from datum_spark.operators.spatial import cluster_within
-
-    # chain 1-2-3 links transitively (single linkage), 4 is isolated
-    pts = [(1, 0.0, 0.0), (2, 0.9, 0.0), (3, 1.8, 0.0), (4, 9.0, 0.0)]
-    df = spark.createDataFrame(pts, "id bigint, x double, y double")
-    got = {r["id"]: r["cluster"]
-           for r in cluster_within(df, "id", "x", "y", 1.0).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4}
-
-
 # --------------------------------------------------------------- DSIR
 
 def test_dsir_weights_favor_target_like_docs(spark):
